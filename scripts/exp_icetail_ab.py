@@ -69,6 +69,15 @@ def main() -> None:
         tail_iceberg_once builds it (minus the sink write)."""
         ii = importlib.import_module(f"{_PKG}.sources.iceberg_interop")
         lt = importlib.import_module(f"{_PKG}.streaming.laketail")
+        # the side is chosen by the sys.modules purge + sys.path order
+        # around the call; refuse to measure the wrong revision
+        want = os.path.realpath(pkg_root)
+        for m in (ii, lt):
+            got = os.path.realpath(m.__file__)
+            if os.path.commonpath([got, want]) != want:
+                raise RuntimeError(
+                    f"{m.__name__} imported from {got}, not under {want}"
+                )
         changes = ii.read_iceberg_changelog(spark, src, first, cur)
         return lt._reduce_changes(changes, ["id"], "_change_ordinal")
 

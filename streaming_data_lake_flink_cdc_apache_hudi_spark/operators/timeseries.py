@@ -103,11 +103,11 @@ def interpolate_linear(
     Scale shape: exact-timestamp collisions collapse via one grouped
     mean; the grid is generated IN-PLAN from a per-series (min, max)
     aggregate (sequence + explode — executor-side, tiny bounds table);
-    samples ∪ grid sort once per series inside a keyed window where
-    ``last(..., ignorenulls)`` / ``first(..., ignorenulls)`` carry
-    the bracketing samples to every grid point — two window passes
-    over (samples + grid) rows, all shuffles keyed by the series,
-    never a global sort.
+    samples ∪ grid sort per series, ascending and descending, and
+    ``last(..., ignorenulls)`` over each running frame carries the
+    left / right bracketing sample to every grid point — two O(n)
+    window passes over (samples + grid) rows, all shuffles keyed by
+    the series, never a global sort.
 
     Output: (series, grid ts as 'yyyy-MM-dd HH:mm:ss' string, value)
     — value rounded for cross-engine hashing, the lerp arithmetic
@@ -118,10 +118,15 @@ def interpolate_linear(
         .orderBy("_t", "_is_grid")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    # the right bracket is the last sample of the REVERSED running
+    # frame: Spark re-aggregates a (current row, unbounded following)
+    # frame for every row — O(n^2) per series — while a running frame
+    # is O(n). (_t, _is_grid) is unique within a series (samples are
+    # grouped by _t), so the reversed order is exact.
     w_next = (
         Window.partitionBy("_s")
-        .orderBy("_t", "_is_grid")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(F.desc("_t"), F.desc("_is_grid"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     us = _epoch_us_ntz(ts_col)
     samples = (
@@ -162,10 +167,10 @@ def interpolate_linear(
                 ignorenulls=True,
             ).over(w_prev),
         )
-        .withColumn("_nv", F.first("_v", ignorenulls=True).over(w_next))
+        .withColumn("_nv", F.last("_v", ignorenulls=True).over(w_next))
         .withColumn(
             "_nt",
-            F.first(
+            F.last(
                 F.when(F.col("_v").isNotNull(), F.col("_t")),
                 ignorenulls=True,
             ).over(w_next),

@@ -2702,6 +2702,14 @@ def upsert_delta(
             # the footer schema-inference job (r14 §2.6: the warm
             # commit is a chain of small sequential driver jobs)
             rd = rd.schema(df.select(*tbl_cols).schema)
+            if part_cols:
+                # partition columns are not in the data files: without
+                # basePath the file list carries no partition dirs and
+                # the declared columns read as NULL (a key partition
+                # column then passes the uniqueness check as one NULL
+                # key and retires no live row). With it, their values
+                # come from the paths, typed by the declared schema.
+                rd = rd.option("basePath", path)
         written = rd.parquet(*abs_parts)
         # r14 (§2.6): rows + distinct keys in ONE aggregate job (the
         # warm commit was ~5 sequential py4j round-trips; the two

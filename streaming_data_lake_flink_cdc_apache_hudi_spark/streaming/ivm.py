@@ -43,12 +43,35 @@ cost is proportional to the delta, not the state:
 
 The only driver-side values in the read path are the bucket-id lists
 (≤ num_buckets ints per table). Everything else stays distributed.
+
+At small deltas a micro-batch is bounded by fixed per-query cost (job
+scheduling, file listing), not data, so each step is submitted once:
+
+- every source delta is pinned once; it then feeds the state
+  commits, the affected set and the diff;
+- the state commits run concurrently on InheritableThreads: person ∥
+  (ticket ∥ tickets_by_holder) ∥ (hist ∥ the hist→ticket bucket
+  collect). They write different tables, so the per-table leases
+  never contend; the first error is re-raised after all finish, and
+  exactly-once commit ids make a replay of a half-failed batch
+  converge;
+- person and tickets_by_holder bucket ids come from one aggregate over
+  the pinned affected set; the affected-person slice is pinned once
+  and reused for the diff's candidate names;
+- state scans take their schema from the table's ``_schema.json``
+  (no footer-inference job; see ``UpsertLakeTable._read_dir``).
+
+Tracing note: the benchmark's spans parent per thread, so its
+``ivm.state_write_s`` reads 0 with state commits on worker threads;
+per-table commit time is in the ``upsert_sink.write`` spans, by
+commit id.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -89,6 +112,59 @@ _TICKET_SCHEMA = T.StructType(
         T.StructField("ticket_price", T.FloatType()),
     ]
 )
+
+
+def _drop_before(delta: DataFrame) -> DataFrame:
+    """The delta without its ``_before_<col>`` pre-image columns."""
+    return delta.drop(*[c for c in delta.columns if c.startswith("_before_")])
+
+
+def _by_holder(ticket_delta: DataFrame) -> DataFrame:
+    """The tickets-by-holder projection of a ticket delta: each live
+    row goes into its NEW holder's bucket, plus a move-tombstone into
+    the OLD holder's bucket whenever the holder changed, so a pruned
+    read of the old bucket sees the departure instead of the stale
+    row."""
+    tbh = _drop_before(ticket_delta)
+    if "_before_ticketholder_id" not in ticket_delta.columns:
+        return tbh
+    moved = (
+        ticket_delta.filter(
+            F.col("_before_ticketholder_id").isNotNull()
+            & ~F.col("_before_ticketholder_id").eqNullSafe(
+                F.col("ticketholder_id")
+            )
+        )
+        .withColumn("ticketholder_id", F.col("_before_ticketholder_id"))
+        .withColumn("_deleted", F.lit(True))
+        .transform(_drop_before)
+    )
+    return tbh.unionByName(moved)
+
+
+def _run_concurrently(tasks: Sequence[Callable[[], object]]) -> None:
+    """Run ``tasks`` on InheritableThreads (they keep the caller's Spark
+    local properties), wait for all, then re-raise the first error in
+    task order. Every task finishes before anything is raised, so a
+    failed batch never leaves a commit running behind the caller."""
+    errors: list[BaseException | None] = [None] * len(tasks)
+
+    def guarded(i: int) -> None:
+        try:
+            tasks[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors[i] = e
+
+    threads = [
+        InheritableThread(target=guarded, args=(i,)) for i in range(len(tasks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
 
 
 class FlagshipViewIVM:
@@ -190,72 +266,71 @@ class FlagshipViewIVM:
         land in the pre-batch holder's bucket.
         """
         cid = commit_id or "batch"
-        # 1. merge deltas into per-source state
+        # each delta is computed once: the state commits, the affected
+        # set and the diff all read the pinned rows
+        person_delta, ticket_delta, hist_delta = (
+            None if d is None else pin(d)
+            for d in (person_delta, ticket_delta, hist_delta)
+        )
+        # 1. merge deltas into per-source state. The state tables are
+        # independent (own dir, own lease, own exactly-once commit id),
+        # so their commits run concurrently; a replay of a half-failed
+        # batch skips the tables that committed and converges. The
+        # hist→ticket probe's bucket ids depend on the delta only, so
+        # they are collected beside the commits.
+        tasks = []
         if person_delta is not None:
-            self.person.write(
-                person_delta.drop(
-                    *[c for c in person_delta.columns if c.startswith("_before_")]
-                ),
-                commit_id=f"{cid}-person",
-                delete_col="_deleted",
+            tasks.append(
+                lambda: self.person.write(
+                    _drop_before(person_delta),
+                    commit_id=f"{cid}-person",
+                    delete_col="_deleted",
+                )
             )
         if ticket_delta is not None:
-            tkt_cols = [
-                c for c in ticket_delta.columns if c.startswith("_before_")
-            ]
-            self.ticket.write(
-                ticket_delta.drop(*tkt_cols),
-                commit_id=f"{cid}-ticket",
-                delete_col="_deleted",
+            tasks.append(
+                lambda: self.ticket.write(
+                    _drop_before(ticket_delta),
+                    commit_id=f"{cid}-ticket",
+                    delete_col="_deleted",
+                )
             )
-            # by-holder projection: live row into the NEW holder's
-            # bucket; a move-tombstone into the OLD holder's bucket
-            # whenever the holder changed, so a pruned read of the old
-            # bucket sees the departure instead of the stale row
-            tbh = ticket_delta.drop(*tkt_cols)
-            if "_before_ticketholder_id" in ticket_delta.columns:
-                moved = (
-                    ticket_delta.filter(
-                        F.col("_before_ticketholder_id").isNotNull()
-                        & ~F.col("_before_ticketholder_id").eqNullSafe(
-                            F.col("ticketholder_id")
+            tasks.append(
+                lambda: self.ticket_by_holder.write(
+                    _by_holder(ticket_delta),
+                    commit_id=f"{cid}-tbh",
+                    delete_col="_deleted",
+                )
+            )
+        t_buckets: list[int] = []
+        if hist_delta is not None:
+            tasks.append(
+                lambda: self.hist.write(
+                    _drop_before(hist_delta),
+                    commit_id=f"{cid}-hist",
+                    delete_col="_deleted",
+                )
+            )
+            tasks.append(
+                lambda: t_buckets.extend(
+                    self.ticket.bucket_filter_for(
+                        hist_delta.select(
+                            F.col("sporting_event_ticket_id").alias("id")
                         )
                     )
-                    .withColumn(
-                        "ticketholder_id", F.col("_before_ticketholder_id")
-                    )
-                    .withColumn("_deleted", F.lit(True))
-                    .drop(*tkt_cols)
                 )
-                tbh = tbh.unionByName(moved)
-            self.ticket_by_holder.write(
-                tbh, commit_id=f"{cid}-tbh", delete_col="_deleted"
             )
-        if hist_delta is not None:
-            self.hist.write(
-                hist_delta.drop(
-                    *[c for c in hist_delta.columns if c.startswith("_before_")]
-                ),
-                commit_id=f"{cid}-hist",
-                delete_col="_deleted",
-            )
+        _run_concurrently(tasks)
 
-        # 2. affected view slice. The hist-delta resolution probes
-        # ticket state by its KEY (ticket id) → bucket-pruned read.
-        # localCheckpoint materializes the (O(delta)-sized) affected
-        # set: it is reused by three bucket collects + two semi-joins,
-        # and the truncated lineage sidesteps Spark's ambiguous-
-        # self-join check between state reads.
+        # 2. affected view slice. localCheckpoint materializes the
+        # (O(delta)-sized) affected set: it is reused by the bucket
+        # collect + two semi-joins, and the truncated lineage sidesteps
+        # Spark's ambiguous-self-join check between state reads.
         ticket_probe = None
         if hist_delta is not None:
-            t_buckets = self.ticket.bucket_filter_for(
-                hist_delta.select(F.col("sporting_event_ticket_id").alias("id"))
-            )
             ticket_probe = self.ticket.snapshot(bucket_filter=t_buckets).select(
                 "id", "ticketholder_id"
             )
-        else:
-            t_buckets = []
         affected = (
             self._affected_person_ids(
                 person_delta, ticket_delta, hist_delta, ticket_probe
@@ -266,16 +341,19 @@ class FlagshipViewIVM:
 
         # 3. recompute the flagship join for affected persons only —
         # every state read pruned to the buckets the probe keys hash to.
-        # Column prefixes keep the join sides' attribute lineage
-        # disjoint (ambiguous-self-join check).
-        p_buckets = self.person.bucket_filter_for(
-            affected.select(F.col("a_pid").alias("id"))
-        )
+        # Person (by id) and tickets-by-holder (by holder) are probed
+        # with the same affected ids: one aggregate collects both
+        # tables' bucket ids. Column prefixes keep the join sides'
+        # attribute lineage disjoint (ambiguous-self-join check).
+        pb, tb = affected.agg(
+            *[
+                F.collect_set(t._bucket_expr(["a_pid"]))
+                for t in (self.person, self.ticket_by_holder)
+            ]
+        ).first()
+        p_buckets, tbh_buckets = sorted(pb), sorted(tb)
         p_state = self.person.snapshot(bucket_filter=p_buckets).select(
             F.col("id").alias("p_id"), F.col("full_name").alias("p_full_name")
-        )
-        tbh_buckets = self.ticket_by_holder.bucket_filter_for(
-            affected.select(F.col("a_pid").alias("ticketholder_id"))
         )
         t_state = self.ticket_by_holder.snapshot(
             bucket_filter=tbh_buckets
@@ -284,9 +362,12 @@ class FlagshipViewIVM:
             F.col("ticketholder_id").alias("t_holder"),
             F.col("ticket_price").alias("t_price"),
         )
-        p = p_state.join(affected, p_state["p_id"] == affected["a_pid"], "left_semi")
-        # affected persons' tickets: O(delta)-sized; materialized so the
-        # hist bucket collect and the final join don't recompute it
+        # affected persons (reused by the diff's candidate names) and
+        # their tickets: O(delta)-sized, materialized so the hist bucket
+        # collect, the join and the diff don't re-merge person state
+        p = p_state.join(
+            affected, p_state["p_id"] == affected["a_pid"], "left_semi"
+        ).transform(pin)
         pt = (
             p.join(t_state, p["p_id"] == t_state["t_holder"])
             .select("p_full_name", "t_id", "t_price")
@@ -336,9 +417,7 @@ class FlagshipViewIVM:
 
         # 4. diff: upserts = fresh; deletes = previously-live keys of
         # affected persons (current OR pre-image names) with no fresh row
-        candidate_names = p_state.join(
-            affected, p_state["p_id"] == affected["a_pid"], "left_semi"
-        ).select(F.col("p_full_name").alias("full_name"))
+        candidate_names = p.select(F.col("p_full_name").alias("full_name"))
         if person_delta is not None:
             candidate_names = candidate_names.unionByName(
                 person_delta.select(
@@ -447,7 +526,14 @@ def mux_feed_schema() -> T.StructType:
 
 class FlagshipStreamRunner:
     """End-to-end streaming flagship: multiplexed feed dir →
-    FlagshipViewIVM, one IVM transaction per micro-batch."""
+    FlagshipViewIVM, one IVM transaction per micro-batch.
+
+    Per micro-batch: the batch is pinned (read from the feed once) and
+    one collect of its ``src`` tags says which sources it carries;
+    each present source is reduced to its delta
+    (``reduce_changelog_batch`` + the ``min_by`` pre-image join), which
+    ``FlagshipViewIVM.apply`` pins once before its concurrent state
+    commits."""
 
     def __init__(self, spark: SparkSession, root: str, feed_dir: str):
         self.spark = spark
@@ -468,10 +554,15 @@ class FlagshipStreamRunner:
         )
 
         def _apply(batch: DataFrame, epoch_id: int) -> None:
+            # the micro-batch is read from the feed once; one collect of
+            # its source tags replaces a per-source emptiness probe
+            batch = pin(batch)
+            present = {r[0] for r in batch.select("src").distinct().collect()}
+
             def delta(src, fields, key, before_cols):
-                sub = batch.filter(F.col("src") == src).drop("src")
-                if sub.isEmpty():
+                if src not in present:
                     return None
+                sub = batch.filter(F.col("src") == src).drop("src")
                 red = reduce_changelog_batch(sub, key)
                 # keep _cdc_ts/_cdc_seq: the state tables store them as
                 # precombine fields (cross-batch event-time LWW)

@@ -2176,6 +2176,34 @@ def test_upsert_delta_partitioned(spark, tmp_path):
     )
 
 
+
+def test_upsert_delta_partitioned_by_key(spark, tmp_path):
+    """A table partitioned by its KEY: the fused validation read must
+    see the key from the partition paths, not as NULL — else a
+    one-row batch passes as one NULL key, retires no live row and the
+    commit lands a duplicate key."""
+    from collections import Counter
+
+    from streaming_data_lake_flink_cdc_apache_hudi_spark.sources.delta_interop import (
+        export_delta,
+        read_delta,
+        upsert_delta,
+    )
+
+    path = str(tmp_path / "ups_keypart")
+    mk = lambda rows: spark.createDataFrame(rows, "pk string, v long")
+    export_delta(mk([("a", 1), ("b", 2)]), path, partition_by=["pk"])
+    res = upsert_delta(spark, path, mk([("a", 99)]), ["pk"])
+    assert res["upserted_rows"] == 1 and res["files_touched"] == 1
+    C = lambda df: Counter(map(tuple, df.select("pk", "v").collect()))
+    assert C(read_delta(spark, path)) == Counter({("a", 99): 1, ("b", 2): 1})
+    with pytest.raises(ValueError, match="dedup to one row per key"):
+        upsert_delta(spark, path, mk([("c", 1), ("c", 2)]), ["pk"])
+    upsert_delta(spark, path, mk([("b", 5), ("c", 6)]), ["pk"])
+    assert C(read_delta(spark, path)) == Counter(
+        {("a", 99): 1, ("b", 5): 1, ("c", 6): 1}
+    )
+
 def test_cdf_table_path_with_space(spark, tmp_path):
     """r14 ADVICE: the batched CDF version stamp keys on the
     normalized _metadata.file_path matching os.path.abspath — a table

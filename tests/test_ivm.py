@@ -170,6 +170,121 @@ def test_ivm_matches_batch_recompute(spark, tmp_path):
     assert dups == 0
 
 
+
+def _flagship_seed(spark, ivm):
+    """8 persons, 16 tickets, one hist row per ticket: every person
+    has a live view row."""
+    persons = [_person(i, f"Person Num{i}") for i in range(1, 9)]
+    tickets = [_ticket(t, (t % 8) + 1, 10.0 + t) for t in range(1, 17)]
+    hist = [
+        _hist(t, (t % 8) + 1, f"2024-01-01T00:{t:02d}:00", 0, 10.0 + t)
+        for t in range(1, 17)
+    ]
+    ivm.apply(
+        person_delta=spark.createDataFrame(persons, P_SCHEMA),
+        ticket_delta=spark.createDataFrame(tickets, T_SCHEMA),
+        hist_delta=spark.createDataFrame(hist, H_SCHEMA),
+        commit_id="b0",
+    )
+    _assert_view_matches(ivm)
+    assert ivm.view.snapshot().count() == 8
+
+
+def test_ivm_failed_state_commit_replays_to_batch_recompute(
+    spark, tmp_path, monkeypatch
+):
+    """State commits run concurrently: one table's failing write must
+    surface from apply(), and replaying the batch under the same
+    commit id must converge to the batch recompute without committing
+    any table twice."""
+    ivm = FlagshipViewIVM(spark, str(tmp_path / "ivm"))
+    _flagship_seed(spark, ivm)
+
+    real_write = ivm.ticket_by_holder.write
+    calls = []
+
+    def flaky_write(*args, **kwargs):
+        calls.append(kwargs.get("commit_id"))
+        if len(calls) == 1:
+            raise RuntimeError("injected by-holder commit failure")
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(ivm.ticket_by_holder, "write", flaky_write)
+
+    def batch():
+        return dict(
+            person_delta=spark.createDataFrame(
+                [_person(2, "Person Moved2", before_name="Person Num2")],
+                P_SCHEMA,
+            ),
+            ticket_delta=spark.createDataFrame(
+                [_ticket(3, 1, 13.0, before_holder=4),
+                 _ticket(5, 7, 15.0, before_holder=6)],
+                T_SCHEMA,
+            ),
+            hist_delta=spark.createDataFrame(
+                [_hist(3, 1, "2024-02-01T00:00:00", 4, 13.0),
+                 _hist(5, 7, "2024-02-01T00:01:00", 6, 15.0)],
+                H_SCHEMA,
+            ),
+            commit_id="b1",
+        )
+
+    with pytest.raises(RuntimeError, match="injected by-holder"):
+        ivm.apply(**batch())
+    # the other state tables committed; the view did not
+    assert "b1-ticket" in {c["commit_id"] for c in ivm.ticket.commits()}
+    assert "b1-view" not in {c["commit_id"] for c in ivm.view.commits()}
+
+    ivm.apply(**batch())  # replay: same commit id
+    assert calls == ["b1-tbh", "b1-tbh"]
+    _assert_view_matches(ivm)
+    names = {r["full_name"] for r in ivm.view.snapshot().collect()}
+    assert "Person Moved2" in names and "Person Num2" not in names
+    for t in (ivm.person, ivm.ticket, ivm.ticket_by_holder, ivm.hist, ivm.view):
+        ids = [c["commit_id"] for c in t.commits() if c["kind"] == "delta"]
+        assert len(ids) == len(set(ids)), f"duplicate commit in {t.path}: {ids}"
+        assert "b1" in {i.split("-")[0] for i in ids}
+
+
+def test_ivm_person_only_batch(spark, tmp_path):
+    """A batch carrying only person changes commits one state table and
+    still retracts renamed / deleted persons' view rows."""
+    ivm = FlagshipViewIVM(spark, str(tmp_path / "ivm"))
+    _flagship_seed(spark, ivm)
+    seqs = {
+        n: t.last_commit_seq()
+        for n, t in (
+            ("ticket", ivm.ticket),
+            ("ticket_by_holder", ivm.ticket_by_holder),
+            ("hist", ivm.hist),
+        )
+    }
+    ivm.apply(
+        person_delta=spark.createDataFrame(
+            [
+                _person(3, "Person Renamed3", before_name="Person Num3"),
+                _person(5, "Person Num5", deleted=True,
+                        before_name="Person Num5"),
+                _person(9, "Person Num9"),  # new, holds no ticket
+            ],
+            P_SCHEMA,
+        ),
+        commit_id="b1",
+    )
+    _assert_view_matches(ivm)
+    names = {r["full_name"] for r in ivm.view.snapshot().collect()}
+    assert "Person Renamed3" in names
+    assert not names & {"Person Num3", "Person Num5", "Person Num9"}
+    # only person state moved; the hist -> ticket probe read nothing
+    assert {n: t.last_commit_seq() for n, t in (
+        ("ticket", ivm.ticket),
+        ("ticket_by_holder", ivm.ticket_by_holder),
+        ("hist", ivm.hist),
+    )} == seqs
+    assert ivm.last_read_buckets["ticket"] == []
+    assert "b1-person" in {c["commit_id"] for c in ivm.person.commits()}
+
 def _env_rows(rows):
     """rows: (op, ts, seq, before|None, after|None) with images as
     (id, cat, amt)."""

@@ -1117,3 +1117,112 @@ def test_incremental_and_changes_before_horizon_raise(spark, tmp_path):
             commit_id="c4")
     got = {r["k"] for r in t.incremental(since_seq=3).collect()}
     assert got == {4}
+
+
+# -- read path: schema-on-read from _schema.json ---------------------------
+
+
+def test_snapshot_build_submits_no_spark_jobs(spark, tmp_path):
+    """A non-evolved table's scans take their schema from _schema.json:
+    building a snapshot over base + log lists files but submits no
+    Spark job (footer schema inference would submit one per dir)."""
+    t = UpsertLakeTable(
+        spark, str(tmp_path / "sor"), key="uuid", num_buckets=4, compact_every=2
+    )
+    t.write(_t1(spark, T1_ROWS), commit_id="c1")
+    t.write(
+        _t1(spark, [("id1", "Danny II", 24, "1970-01-02 00:00:00")]),
+        commit_id="c2",
+    )  # 2nd delta: compaction folds both into the base
+    t.write(
+        _t1(spark, [("id2", "Stephen II", 34, "1970-01-02 00:00:00")]),
+        commit_id="c3",
+    )  # stays in the log
+    assert os.path.isdir(t._base) and os.path.isdir(t._log)
+    # jobs are counted by a job group on this thread, so Spark work of
+    # other threads in the shared session cannot leak into the count
+    sc = spark.sparkContext
+    group = f"snapshot-build-{id(t):x}"
+    sc.setJobGroup(group, "snapshot build")
+    try:
+        snap = t.snapshot()
+        with_meta = t.snapshot(with_meta=True)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    got = {r["uuid"]: r["name"] for r in snap.collect()}
+    assert len(got) == 8
+    assert got["id1"] == "Danny II" and got["id2"] == "Stephen II"
+    seqs = {r["uuid"]: r["_commit_seq"] for r in with_meta.collect()}
+    # winner seqs survive compaction; the log's come from commit=<seq>
+    assert (seqs["id3"], seqs["id1"], seqs["id2"]) == (1, 2, 4)
+    assert dict(snap.dtypes) == {
+        "uuid": "string", "name": "string", "age": "int", "ts": "timestamp",
+    }
+
+
+def test_evolved_tables_read_older_files_as_typed_nulls(spark, tmp_path):
+    """Evolved tables (evolve_schema writes, ALTER ADD COLUMNS) keep the
+    inference read: base and log files predating a column read it as
+    a NULL of the declared type."""
+    t = UpsertLakeTable(
+        spark, str(tmp_path / "evo"), key="uuid", num_buckets=4, compact_every=2
+    )
+    t.write(_t1(spark, T1_ROWS[:4]), commit_id="c1")
+    t.write(_t1(spark, T1_ROWS[4:]), commit_id="c2")  # -> base
+    t.write(
+        _t1(spark, [("id1", "Danny II", 24, "1970-01-02 00:00:00")]).withColumn(
+            "score", F.lit(1.5)
+        ),
+        commit_id="c3",
+        evolve_schema=True,
+    )  # log, with the new column
+    t.alter_add_columns({"note": "string"})
+    snap = t.snapshot()
+    assert dict(snap.dtypes)["score"] == "double"
+    assert dict(snap.dtypes)["note"] == "string"
+    got = {r["uuid"]: (r["score"], r["note"]) for r in snap.collect()}
+    assert got["id1"] == (1.5, None)
+    assert got["id2"] == (None, None) and got["id8"] == (None, None)
+    assert len(got) == 8
+
+
+def test_legacy_log_bucket_layout_still_reads(spark, tmp_path):
+    """A log in the pre-commit-dir layout (log/bucket=<i>/, commit seq
+    only inside the files) is still read: a declared ``commit``
+    partition column would read as NULL there and the visibility
+    filter would drop every row."""
+    import shutil
+
+    t = UpsertLakeTable(
+        spark, str(tmp_path / "legacy"), key="uuid", num_buckets=4,
+        compact_every=10,
+    )
+    t.write(_t1(spark, T1_ROWS), commit_id="c1")
+    t.write(
+        _t1(spark, [("id1", "Danny II", 24, "1970-01-02 00:00:00")]),
+        commit_id="c2",
+    )
+    # rewrite the log into the legacy layout
+    for c in sorted(os.listdir(t._log)):
+        cdir = os.path.join(t._log, c)
+        if not c.startswith("commit="):
+            continue
+        for b in os.listdir(cdir):
+            if not b.startswith("bucket="):
+                continue
+            dst = os.path.join(t._log, b)
+            os.makedirs(dst, exist_ok=True)
+            for f in os.listdir(os.path.join(cdir, b)):
+                if not f.endswith(".parquet"):
+                    continue
+                shutil.move(
+                    os.path.join(cdir, b, f), os.path.join(dst, f"{c}-{f}")
+                )
+        shutil.rmtree(cdir)
+    assert all(e.startswith("bucket=") for e in os.listdir(t._log)
+               if not e.startswith(("_", ".")))
+    got = {r["uuid"]: r["name"] for r in t.snapshot().collect()}
+    assert len(got) == 8
+    assert got["id1"] == "Danny II"
