@@ -4924,7 +4924,8 @@ UNION ALL SELECT 'id1', 'New Name', 30, 'new@x.io'
     doc="Hudi-style schema evolution: commit 2 adds an `email` column "
     "(evolve_schema write); the snapshot serves the union schema with "
     "pre-evolution rows reading NULL. Literal oracle pins the "
-    "add-column contract (UpsertLakeTable._validate_schema/_conform).",
+    "add-column contract (UpsertLakeTable._validate_schema and the "
+    "declared-schema read).",
 )
 def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile

@@ -58,8 +58,9 @@ scheduling, file listing), not data, so each step is submitted once:
 - person and tickets_by_holder bucket ids come from one aggregate over
   the pinned affected set; the affected-person slice is pinned once
   and reused for the diff's candidate names;
-- state scans take their schema from the table's ``_schema.json``
-  (no footer-inference job; see ``UpsertLakeTable._read_dir``).
+- every state scan takes its schema from the table's ``_schema.json``
+  (no footer-inference job, evolved tables included; see
+  ``UpsertLakeTable._read_dir``).
 
 Tracing note: the benchmark's spans parent per thread, so its
 ``ivm.state_write_s`` reads 0 with state commits on worker threads;

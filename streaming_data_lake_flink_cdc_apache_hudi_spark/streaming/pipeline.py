@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -65,6 +65,51 @@ def reduce_changelog_batch(
     )
 
 
+def _start(
+    changelog: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger: dict | None,
+) -> StreamingQuery:
+    """Run ``fn(batch, epoch_id)`` on every micro-batch of
+    ``changelog``, checkpointed in ``checkpoint_dir``; the trigger
+    defaults to availableNow (drain what is there, then stop)."""
+    return (
+        changelog.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
+def _format_upsert(
+    keys: list[str],
+    upsert: Callable[[SparkSession, DataFrame | None, DataFrame | None], None],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch body of the format sinks: reduce the batch to a
+    keyed LWW delta, split tombstones out and commit once through
+    ``upsert(spark, ups, dels)`` — an empty side is passed as None,
+    and a batch with neither commits nothing."""
+
+    def _commit(batch: DataFrame, epoch_id: int) -> None:
+        delta = reduce_changelog_batch(batch, keys)
+        ups = delta.filter(~F.col("_deleted")).drop(
+            "_deleted", "_cdc_ts", "_cdc_seq"
+        )
+        dels = delta.filter(F.col("_deleted")).select(*keys)
+        n_ups, n_dels = ups.count(), dels.count()
+        if not n_ups and not n_dels:
+            return
+        upsert(
+            batch.sparkSession,
+            ups if n_ups else None,
+            dels if n_dels else None,
+        )
+
+    return _commit
+
+
 def stream_upsert(
     changelog: DataFrame,
     table: UpsertLakeTable,
@@ -94,13 +139,7 @@ def stream_upsert(
             delete_col="_deleted",
         )
 
-    writer = (
-        changelog.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return _start(changelog, _merge, checkpoint_dir, trigger)
 
 
 def stream_upsert_iceberg(
@@ -133,32 +172,14 @@ def stream_upsert_iceberg(
     eq-delete retires the replayed rows' previous versions)."""
     keys = [key] if isinstance(key, str) else list(key)
 
-    def _commit(batch: DataFrame, epoch_id: int) -> None:
+    def _upsert(spark: SparkSession, ups, dels) -> None:
         from ..sources.iceberg_interop import upsert_iceberg
 
-        delta = reduce_changelog_batch(batch, keys)
-        ups = delta.filter(~F.col("_deleted")).drop(
-            "_deleted", "_cdc_ts", "_cdc_seq"
-        )
-        dels = delta.filter(F.col("_deleted")).select(*keys)
-        n_ups, n_dels = ups.count(), dels.count()
-        if not n_ups and not n_dels:
-            return
-        upsert_iceberg(
-            batch.sparkSession,
-            path,
-            ups if n_ups else None,
-            keys,
-            deletes=dels if n_dels else None,
-        )
+        upsert_iceberg(spark, path, ups, keys, deletes=dels)
 
-    writer = (
-        changelog.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(
+        changelog, _format_upsert(keys, _upsert), checkpoint_dir, trigger
     )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
 
 
 def stream_upsert_delta(
@@ -186,32 +207,14 @@ def stream_upsert_delta(
     and converge (the DV re-delete merges identical positions)."""
     keys = [key] if isinstance(key, str) else list(key)
 
-    def _commit(batch: DataFrame, epoch_id: int) -> None:
+    def _upsert(spark: SparkSession, ups, dels) -> None:
         from ..sources.delta_interop import upsert_delta
 
-        delta = reduce_changelog_batch(batch, keys)
-        ups = delta.filter(~F.col("_deleted")).drop(
-            "_deleted", "_cdc_ts", "_cdc_seq"
-        )
-        dels = delta.filter(F.col("_deleted")).select(*keys)
-        n_ups, n_dels = ups.count(), dels.count()
-        if not n_ups and not n_dels:
-            return
-        upsert_delta(
-            batch.sparkSession,
-            path,
-            ups if n_ups else None,
-            keys,
-            deletes=dels if n_dels else None,
-        )
+        upsert_delta(spark, path, ups, keys, deletes=dels)
 
-    writer = (
-        changelog.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(
+        changelog, _format_upsert(keys, _upsert), checkpoint_dir, trigger
     )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
 
 
 def stream_upsert_hudi(
@@ -324,32 +327,15 @@ def stream_upsert_hudi(
         else:
             run()
 
-    def _commit(batch: DataFrame, epoch_id: int) -> None:
+    def _upsert(spark: SparkSession, ups, dels) -> None:
         from ..sources.hudi_interop import upsert_hudi
 
-        delta = reduce_changelog_batch(batch, keys)
-        ups = delta.filter(~F.col("_deleted")).drop(
-            "_deleted", "_cdc_ts", "_cdc_seq"
-        )
-        dels = delta.filter(F.col("_deleted")).select(*keys)
-        n_ups, n_dels = ups.count(), dels.count()
-        if not n_ups and not n_dels:
-            return
-        upsert_hudi(
-            batch.sparkSession,
-            path,
-            ups if n_ups else None,
-            deletes=dels if n_dels else None,
-        )
-        _maybe_compact(batch.sparkSession)
+        upsert_hudi(spark, path, ups, deletes=dels)
+        _maybe_compact(spark)
 
-    writer = (
-        changelog.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    q = _start(
+        changelog, _format_upsert(keys, _upsert), checkpoint_dir, trigger
     )
-    trigger = trigger or {"availableNow": True}
-    q = writer.trigger(**trigger).start()
     q._hudi_compactor = compactor
     return q
 
@@ -372,32 +358,14 @@ def stream_upsert_uniform(
     unpartitioned v2 ``export_uniform`` table."""
     keys = [key] if isinstance(key, str) else list(key)
 
-    def _commit(batch: DataFrame, epoch_id: int) -> None:
+    def _upsert(spark: SparkSession, ups, dels) -> None:
         from ..sources.uniform import upsert_uniform
 
-        delta = reduce_changelog_batch(batch, keys)
-        ups = delta.filter(~F.col("_deleted")).drop(
-            "_deleted", "_cdc_ts", "_cdc_seq"
-        )
-        dels = delta.filter(F.col("_deleted")).select(*keys)
-        n_ups, n_dels = ups.count(), dels.count()
-        if not n_ups and not n_dels:
-            return
-        upsert_uniform(
-            batch.sparkSession,
-            path,
-            ups if n_ups else None,
-            keys,
-            deletes=dels if n_dels else None,
-        )
+        upsert_uniform(spark, path, ups, keys, deletes=dels)
 
-    writer = (
-        changelog.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(
+        changelog, _format_upsert(keys, _upsert), checkpoint_dir, trigger
     )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
 
 
 def stream_static_join(
@@ -453,13 +421,7 @@ def stream_lookup_join(
             delete_col="_deleted",
         )
 
-    writer = (
-        changelog.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return _start(changelog, _enrich, checkpoint_dir, trigger)
 
 
 def stream_temporal_enrich(
@@ -502,13 +464,7 @@ def stream_temporal_enrich(
             delete_col="_deleted",
         )
 
-    writer = (
-        changelog.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return _start(changelog, _enrich, checkpoint_dir, trigger)
 
 
 def sync_incremental(

@@ -213,6 +213,7 @@ class UpsertLakeTable:
         self._base = os.path.join(path, "base")
         self._log = os.path.join(path, "log")
         self._commits = os.path.join(path, "_commits")
+        self._schema_file = os.path.join(path, "_schema.json")
         os.makedirs(self._commits, exist_ok=True)
         self._writer_id = f"w-{os.getpid()}-{id(self):x}"
         self._lease_path = os.path.join(path, "_writer.lease")
@@ -394,92 +395,67 @@ class UpsertLakeTable:
         )
 
     def _read_dir(self, d: str) -> DataFrame | None:
-        entries = (
-            [e for e in os.listdir(d) if not e.startswith("_")]
-            if os.path.isdir(d)
-            else []
-        )
-        if not entries:
+        if not os.path.isdir(d) or all(e.startswith("_") for e in os.listdir(d)):
             return None
-        # schema-on-read: the reader schema comes from _schema.json,
-        # so building a scan lists files but submits no Spark job (a
-        # footer-inference job costs 0.07-0.15 s per directory). Three
-        # cases fall back to inference:
-        # - evolved tables: files predating an added column lack it;
-        #   mergeSchema unions the file footers and _conform adds the
-        #   typed NULLs (the marker gates the extra footer reads);
-        # - no _schema.json (nothing recorded to declare);
-        # - the legacy log/bucket=<i> layout: a declared `commit`
-        #   partition column would read as NULL there and the
-        #   visibility filter below would drop every row.
-        evolved = os.path.exists(os.path.join(self.path, "_evolved"))
-        reader = self.spark.read.option("basePath", d)
-        schema = None if evolved else self._reader_schema(d, entries)
-        if schema is not None:
-            reader = reader.schema(schema)
-        elif evolved:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(d)
-        if "commit" in df.columns:
+        # one read path for every table: the scan schema comes from
+        # _schema.json, so building a scan lists files but submits no
+        # Spark job (a footer-inference job costs 0.07-0.15 s per
+        # directory), and a file predating a column added by an
+        # evolve_schema write or ALTER ADD COLUMNS reads it as a NULL
+        # of the declared type
+        df = (
+            self.spark.read.option("basePath", d)
+            .schema(self._reader_schema(d))
+            .parquet(d)
+        )
+        if d == self._log:
             # log layout: commit=<seq> partition dirs. Visibility =
             # recorded commits only — a partition filter, so orphan
             # dirs from crashed writes are never even listed into the
-            # scan. (Restores _commit_seq's long type: partition
-            # inference reads the dir value as int.)
+            # scan. (Restores _commit_seq's long type: the dir value is
+            # declared int, like the bucket partition column.)
             df = (
                 df.filter(F.col("commit") <= self.last_commit_seq())
                 .withColumn("_commit_seq", F.col("commit").cast("long"))
                 .drop("commit")
             )
-        if evolved:
-            df = self._conform(df)
         return df
 
-    def _reader_schema(self, d: str, entries: Sequence[str]):
-        """Stored fields (``bucket`` excluded) plus the partition columns
-        ``d`` really has (``entries`` is its listing), typed ``int`` as
-        partition inference types them; None when inference must run."""
-        layout = {e.split("=", 1)[0] for e in entries if "=" in e}
-        if d == self._log and layout == {"commit"}:
-            parts = ["commit", "bucket"]
-        elif d == self._base and layout == {"bucket"}:
-            parts = ["bucket"]
-        else:
-            return None  # e.g. the legacy log/bucket=<i> layout
+    def _reader_schema(self, d: str):
+        """Scan schema of the base or log dir ``d``: the stored fields
+        (``bucket`` excluded) plus the dir's partition columns —
+        ``commit``/``bucket`` for the log, ``bucket`` for the base —
+        typed ``int`` as partition discovery types them."""
         stored = self._stored_schema()
         if stored is None:
-            return None
+            # write() records the schema before its first data file
+            # lands, so data without one is not a table of this engine
+            raise FileNotFoundError(
+                f"no _schema.json for upsert table {self.path}"
+            )
         from pyspark.sql import types as T
 
+        parts = ["commit", "bucket"] if d == self._log else ["bucket"]
         return T.StructType(
             [f for f in stored.fields if f.name != "bucket"]
             + [T.StructField(p, T.IntegerType()) for p in parts]
         )
 
-    def _conform(self, df: DataFrame) -> DataFrame:
-        """Project onto the table's current (evolved) schema: columns a
-        file set predates read as typed NULLs, so base and log always
-        union cleanly."""
-        stored = self._stored_schema()
-        if stored is None:
-            return df
-        cols = [
-            F.col(f.name)
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in stored.fields
-        ]
-        extra = [c for c in df.columns if c not in stored.fieldNames()]
-        return df.select(*cols, *extra)
-
     def _stored_schema(self):
-        p = os.path.join(self.path, "_schema.json")
-        if not os.path.exists(p):
+        if not os.path.exists(self._schema_file):
             return None
         from pyspark.sql import types as T
 
-        with open(p) as fh:
-            return T.StructType.fromJson(json.loads(fh.read()))
+        with open(self._schema_file) as fh:
+            return T.StructType.fromJson(json.load(fh))
+
+    def _store_schema(self, schema) -> None:
+        # tmp + rename: a concurrent reader sees the old or the new
+        # schema, never a torn file
+        tmp = self._schema_file + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(schema.json())
+        os.replace(tmp, self._schema_file)
 
     # -- write path (≙ Hudi sink S3) ---------------------------------------
 
@@ -681,10 +657,7 @@ class UpsertLakeTable:
         change-range start) strictly before that horizon would be a
         silently empty/stale answer, so it raises instead (≙ Hudi
         raising on incremental reads past cleaner retention)."""
-        try:
-            metas = list(self.commits()) + list(self._archived())
-        except Exception:
-            metas = list(self.commits())
+        metas = self.commits()
         comps = [m["seq"] for m in metas if m["kind"] == "compaction"]
         if not comps:
             return
@@ -792,17 +765,12 @@ class UpsertLakeTable:
             )
 
     def _save_schema(self, df: DataFrame) -> None:
-        """Record / evolve the table schema. A write whose column SET
-        differs from the stored schema (validation permitting) unions
-        the new columns in and flips the ``_evolved`` marker that
-        turns on mergeSchema + conforming reads."""
-        p = os.path.join(self.path, "_schema.json")
-        if not os.path.exists(p):
-            with open(p, "w") as fh:
-                fh.write(df.schema.json())
-            return
+        """Record / evolve the table schema. A write carrying columns
+        the stored schema lacks (validation permitting) unions them
+        in; files written before read them as typed NULLs."""
         stored = self._stored_schema()
-        if set(df.columns) == set(stored.fieldNames()):
+        if stored is None:
+            self._store_schema(df.schema)
             return
         from pyspark.sql import types as T
 
@@ -811,24 +779,17 @@ class UpsertLakeTable:
             for f in df.schema.fields
             if f.name not in stored.fieldNames()
         ]
-        union = T.StructType(list(stored.fields) + new_fields)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(union.json())
-        os.replace(tmp, p)
-        marker = os.path.join(self.path, "_evolved")
-        if not os.path.exists(marker):
-            with open(marker, "w") as fh:
-                fh.write("")
+        if new_fields:
+            self._store_schema(T.StructType(list(stored.fields) + new_fields))
 
     def alter_add_columns(self, columns: dict[str, str]) -> None:
         """Metadata-only schema evolution (the DDL flavor of the
         write-path ``evolve_schema``): append nullable columns to the
-        stored schema and flip the ``_evolved`` marker. No data is
-        rewritten — files predating the column read as typed NULLs
-        through the conforming-read path, exactly as if the column
-        had arrived via an evolving write. Existing names and key
-        collisions are rejected (evolution never retypes)."""
+        stored schema. No data is rewritten — files predating the
+        column read it as a typed NULL through the declared-schema
+        read, exactly as if the column had arrived via an evolving
+        write. Existing names and key collisions are rejected
+        (evolution never retypes)."""
         from pyspark.sql import types as T
 
         from ..ddl import _parse_sql_type
@@ -846,25 +807,11 @@ class UpsertLakeTable:
             T.StructField(name, _parse_sql_type(sql_type), nullable=True)
             for name, sql_type in columns.items()
         ]
-        union = T.StructType(list(stored.fields) + new_fields)
-        p = os.path.join(self.path, "_schema.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(union.json())
-        os.replace(tmp, p)
-        marker = os.path.join(self.path, "_evolved")
-        if not os.path.exists(marker):
-            with open(marker, "w") as fh:
-                fh.write("")
+        self._store_schema(T.StructType(list(stored.fields) + new_fields))
 
     def _empty(self) -> DataFrame | None:
-        p = os.path.join(self.path, "_schema.json")
-        if not os.path.exists(p):
-            return None
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(open(p).read()))
-        return self.spark.createDataFrame([], schema)
+        stored = self._stored_schema()
+        return None if stored is None else self.spark.createDataFrame([], stored)
 
     def snapshot(
         self,
@@ -934,10 +881,6 @@ class UpsertLakeTable:
         full = lambda: self.snapshot().filter(  # noqa: E731
             F.col(column) == value
         )
-        if os.path.exists(os.path.join(self.path, "_evolved")):
-            # evolved schemas need mergeSchema+conform on the base
-            # read; take the simple exact path there
-            return full()
         try:
             files, _ = candidate_files(self._base, column, value)
         except FileNotFoundError:
@@ -961,7 +904,9 @@ class UpsertLakeTable:
             return full()  # stale sidecar: base was rewritten since
         log = self._read_dir(self._log)
         base = (
-            self.spark.read.option("basePath", self._base).parquet(*files)
+            self.spark.read.option("basePath", self._base)
+            .schema(self._reader_schema(self._base))
+            .parquet(*files)
             if files
             else None
         )
@@ -1289,13 +1234,6 @@ class UpsertLakeTable:
                         f"cannot restore to seq {to_seq}: compaction at seq "
                         f"{c['seq']} folded later deltas into the base"
                     )
-            if os.path.isdir(self._log):
-                for e in os.listdir(self._log):
-                    if e.startswith("bucket="):
-                        raise ValueError(
-                            "restore requires the commit-partitioned log "
-                            "layout (table written by an older engine)"
-                        )
             # markers first, newest first: a commit without its marker
             # is an orphan the readers already ignore, so every crash
             # point leaves a consistent (merely less-restored) timeline.
@@ -1341,8 +1279,6 @@ class UpsertLakeTable:
                     for b in os.listdir(p)
                     if b.startswith("bucket=")
                 )
-            elif e.startswith("bucket="):  # pre-commit-dir layout
-                out.add(int(e.split("=", 1)[1]))
         return sorted(out)
 
     def compact(

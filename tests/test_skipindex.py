@@ -5,6 +5,7 @@ exactness of the pruned read."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -142,6 +143,18 @@ def test_lake_equality_scan_prunes_and_matches_snapshot(spark, tmp_path):
 
     files, total = candidate_files(t._base, "city", "atlantis")
     assert total >= 4 and len(files) < total
+
+    # evolved table (ALTER ADD COLUMNS, base files predate `tag`): the
+    # scan stays pruned to the candidate base files and exact
+    t.alter_add_columns({"tag": "string"})
+    scan = t.equality_scan("city", "atlantis")
+    assert [tuple(r) for r in scan.collect()] == [(42, "atlantis", 42, None)]
+    base_read = {
+        urlparse(f).path
+        for f in scan.inputFiles()
+        if os.path.abspath(t._base) in f
+    }
+    assert base_read == {os.path.abspath(f) for f in files}
 
 
 def test_lake_equality_scan_sees_log_updates_and_deletes(spark, tmp_path):

@@ -1122,10 +1122,30 @@ def test_incremental_and_changes_before_horizon_raise(spark, tmp_path):
 # -- read path: schema-on-read from _schema.json ---------------------------
 
 
+def _snapshot_build_jobs(spark, t):
+    """Builds ``t.snapshot()`` and ``t.snapshot(with_meta=True)`` and
+    returns (Spark jobs submitted meanwhile, snap, with_meta). Jobs are
+    counted by a job group on this thread, so Spark work of other
+    threads in the shared session cannot leak into the count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"snapshot-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot build")
+    try:
+        snap = t.snapshot()
+        with_meta = t.snapshot(with_meta=True)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    return jobs, snap, with_meta
+
+
 def test_snapshot_build_submits_no_spark_jobs(spark, tmp_path):
-    """A non-evolved table's scans take their schema from _schema.json:
-    building a snapshot over base + log lists files but submits no
-    Spark job (footer schema inference would submit one per dir)."""
+    """Scans take their schema from _schema.json: building a snapshot
+    over base + log lists files but submits no Spark job (footer
+    schema inference would submit one per dir) — also on an evolved
+    table, whose older files lack the added columns."""
     t = UpsertLakeTable(
         spark, str(tmp_path / "sor"), key="uuid", num_buckets=4, compact_every=2
     )
@@ -1139,17 +1159,7 @@ def test_snapshot_build_submits_no_spark_jobs(spark, tmp_path):
         commit_id="c3",
     )  # stays in the log
     assert os.path.isdir(t._base) and os.path.isdir(t._log)
-    # jobs are counted by a job group on this thread, so Spark work of
-    # other threads in the shared session cannot leak into the count
-    sc = spark.sparkContext
-    group = f"snapshot-build-{id(t):x}"
-    sc.setJobGroup(group, "snapshot build")
-    try:
-        snap = t.snapshot()
-        with_meta = t.snapshot(with_meta=True)
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+    jobs, snap, with_meta = _snapshot_build_jobs(spark, t)
     assert jobs == []
     got = {r["uuid"]: r["name"] for r in snap.collect()}
     assert len(got) == 8
@@ -1161,11 +1171,39 @@ def test_snapshot_build_submits_no_spark_jobs(spark, tmp_path):
         "uuid": "string", "name": "string", "age": "int", "ts": "timestamp",
     }
 
+    # evolved: c4 adds `score` (its compaction rewrites only the
+    # buckets c3/c4 touch), ALTER adds `note`, c5 (log) omits both
+    t.write(
+        _t1(spark, [("id3", "Julian II", 54, "1970-01-02 00:00:00")])
+        .withColumn("score", F.lit(1.5)),
+        commit_id="c4",
+        evolve_schema=True,
+    )
+    t.alter_add_columns({"note": "string"})
+    t.write(
+        _t1(spark, [("id4", "Fabian II", 32, "1970-01-02 00:00:00")]),
+        commit_id="c5",
+        evolve_schema=True,
+    )
+    assert os.path.isdir(t._log)
+    jobs, snap, with_meta = _snapshot_build_jobs(spark, t)
+    assert jobs == []
+    got = {r["uuid"]: (r["name"], r["score"], r["note"]) for r in snap.collect()}
+    assert len(got) == 8
+    assert got["id3"] == ("Julian II", 1.5, None)
+    assert got["id4"] == ("Fabian II", None, None)
+    assert got["id8"] == ("Han", None, None)
+    assert dict(snap.dtypes) == {
+        "uuid": "string", "name": "string", "age": "int", "ts": "timestamp",
+        "score": "double", "note": "string",
+    }
+    assert with_meta.count() == 8
+
 
 def test_evolved_tables_read_older_files_as_typed_nulls(spark, tmp_path):
-    """Evolved tables (evolve_schema writes, ALTER ADD COLUMNS) keep the
-    inference read: base and log files predating a column read it as
-    a NULL of the declared type."""
+    """Evolved tables (evolve_schema writes, ALTER ADD COLUMNS): base
+    and log files predating a column read it as a NULL of the
+    declared type."""
     t = UpsertLakeTable(
         spark, str(tmp_path / "evo"), key="uuid", num_buckets=4, compact_every=2
     )
@@ -1186,43 +1224,3 @@ def test_evolved_tables_read_older_files_as_typed_nulls(spark, tmp_path):
     assert got["id1"] == (1.5, None)
     assert got["id2"] == (None, None) and got["id8"] == (None, None)
     assert len(got) == 8
-
-
-def test_legacy_log_bucket_layout_still_reads(spark, tmp_path):
-    """A log in the pre-commit-dir layout (log/bucket=<i>/, commit seq
-    only inside the files) is still read: a declared ``commit``
-    partition column would read as NULL there and the visibility
-    filter would drop every row."""
-    import shutil
-
-    t = UpsertLakeTable(
-        spark, str(tmp_path / "legacy"), key="uuid", num_buckets=4,
-        compact_every=10,
-    )
-    t.write(_t1(spark, T1_ROWS), commit_id="c1")
-    t.write(
-        _t1(spark, [("id1", "Danny II", 24, "1970-01-02 00:00:00")]),
-        commit_id="c2",
-    )
-    # rewrite the log into the legacy layout
-    for c in sorted(os.listdir(t._log)):
-        cdir = os.path.join(t._log, c)
-        if not c.startswith("commit="):
-            continue
-        for b in os.listdir(cdir):
-            if not b.startswith("bucket="):
-                continue
-            dst = os.path.join(t._log, b)
-            os.makedirs(dst, exist_ok=True)
-            for f in os.listdir(os.path.join(cdir, b)):
-                if not f.endswith(".parquet"):
-                    continue
-                shutil.move(
-                    os.path.join(cdir, b, f), os.path.join(dst, f"{c}-{f}")
-                )
-        shutil.rmtree(cdir)
-    assert all(e.startswith("bucket=") for e in os.listdir(t._log)
-               if not e.startswith(("_", ".")))
-    got = {r["uuid"]: r["name"] for r in t.snapshot().collect()}
-    assert len(got) == 8
-    assert got["id1"] == "Danny II"
