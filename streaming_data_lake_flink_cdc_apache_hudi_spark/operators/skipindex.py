@@ -252,12 +252,18 @@ def candidate_files(
     """Files that MAY contain value (bloom intersect); (files, total)."""
     with open(index_path(dir_path, column)) as fh:
         idx = json.load(fh)
+    return bloom_candidates(idx, dir_path, value), len(idx["files"])
+
+
+def bloom_candidates(idx: dict, dir_path: str, value) -> list[str]:
+    """The files of a loaded json sidecar ``idx`` whose bloom masks
+    admit ``value`` (sorted absolute paths)."""
     pos = _positions_py(value, idx["k"], idx["bits"])
-    out = []
-    for rel, words in idx["files"].items():
-        if all(words[p // 64] & (1 << (p % 64)) for p in pos):
-            out.append(os.path.join(dir_path, rel))
-    return sorted(out), len(idx["files"])
+    return sorted(
+        os.path.join(dir_path, rel)
+        for rel, words in idx["files"].items()
+        if all(words[p // 64] & (1 << (p % 64)) for p in pos)
+    )
 
 
 def candidate_files_distributed(

@@ -311,6 +311,24 @@ def _log_path(path: str, version: int) -> str:
     return os.path.join(path, _LOG_DIR, "%020d.json" % version)
 
 
+def _hive_partition_values(
+    rel: str, part_cols: list[str]
+) -> dict[str, str | None]:
+    """A data file's ``partitionValues`` from its hive ``col=value``
+    path segments: strings per PROTOCOL.md, and Spark's
+    ``__HIVE_DEFAULT_PARTITION__`` directory is a NULL value, which the
+    log records as JSON null."""
+    import urllib.parse
+
+    vals: dict[str, str | None] = {}
+    for comp in rel.split("/")[:-1]:
+        k, eq, raw = comp.partition("=")
+        if eq and k in part_cols:
+            v = urllib.parse.unquote(raw)
+            vals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+    return vals
+
+
 def export_delta(
     df: DataFrame,
     path: str,
@@ -564,26 +582,6 @@ def export_delta(
         ]
     )
 
-    def _part_vals(rel: str) -> dict[str, str]:
-        # hive-layout path segments `col=value` -> partitionValues
-        # (the log serializes partition values as STRINGS per spec)
-        import urllib.parse
-
-        vals: dict[str, str] = {}
-        for comp in rel.split("/")[:-1]:
-            if "=" not in comp:
-                continue
-            k, _, raw = comp.partition("=")
-            if k in (partition_by or []):
-                vals[k] = urllib.parse.unquote(raw)
-        missing = [c for c in (partition_by or []) if c not in vals]
-        if missing:
-            raise ValueError(
-                f"partition_by: file {rel!r} carries no "
-                f"{missing} path segment"
-            )
-        return vals
-
     stats_by_rel: dict[str, str] = {}
     if stats:
         from .filestats import parquet_footer_stats
@@ -600,10 +598,17 @@ def export_delta(
             if os.path.abspath(os.path.join(path, f)) in footer
         }
     for f in parts:
+        pvals = _hive_partition_values(f, partition_by or [])
+        missing = [c for c in (partition_by or []) if c not in pvals]
+        if missing:
+            raise ValueError(
+                f"partition_by: file {f!r} carries no "
+                f"{missing} path segment"
+            )
         st = os.stat(os.path.join(path, f))
         add = {
             "path": f,
-            "partitionValues": _part_vals(f) if partition_by else {},
+            "partitionValues": pvals,
             "size": st.st_size,
             "modificationTime": int(st.st_mtime * 1000),
             "dataChange": True,
@@ -2445,23 +2450,6 @@ def update_delta(
             for f in _list() - before
         )
 
-    def _part_vals(rel: str) -> dict[str, str | None]:
-        # hive `col=value` path segments -> partitionValues (strings
-        # per spec; the null sentinel maps to None)
-        import urllib.parse
-
-        vals: dict[str, str | None] = {}
-        for comp in rel.split("/")[:-1]:
-            if "=" not in comp:
-                continue
-            k, _, raw = comp.partition("=")
-            if k in part_cols:
-                v = urllib.parse.unquote(raw)
-                vals[k] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                )
-        return vals
-
     actions, _, n_touched = _dv_delete_actions(
         spark, path, matched.select("_dv_fp", "_dv_pos"), adds, meta, proto
     )
@@ -2481,7 +2469,9 @@ def update_delta(
             {
                 "add": {
                     "path": rel,
-                    "partitionValues": _part_vals(rel),
+                    "partitionValues": _hive_partition_values(
+                        rel, part_cols
+                    ),
                     "size": st.st_size,
                     "modificationTime": int(st.st_mtime * 1000),
                     "dataChange": True,
@@ -2519,8 +2509,8 @@ def update_delta(
                         # change files partition like data files, so
                         # the CDF reader re-attaches the values from
                         # the action (delta-spark's layout)
-                        "partitionValues": _part_vals(
-                            os.path.relpath(rel, "_change_data")
+                        "partitionValues": _hive_partition_values(
+                            os.path.relpath(rel, "_change_data"), part_cols
                         ),
                         "size": st.st_size,
                         "dataChange": False,
@@ -2760,28 +2750,15 @@ def upsert_delta(
     actions, _deleted, n_touched = _dv_delete_actions(
         spark, path, matched, adds, meta, proto
     )
-    def _pvals(rel: str) -> dict:
-        import urllib.parse
-
-        vals: dict = {}
-        for comp in rel.split("/")[:-1]:
-            if "=" not in comp:
-                continue
-            k, _, raw = comp.partition("=")
-            if k in part_cols:
-                v = urllib.parse.unquote(raw)
-                vals[k] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                )
-        return vals
-
     for rel in parts:
         st = os.stat(os.path.join(path, rel))
         actions.append(
             {
                 "add": {
                     "path": rel,
-                    "partitionValues": _pvals(rel) if part_cols else {},
+                    "partitionValues": _hive_partition_values(
+                        rel, part_cols
+                    ),
                     "size": st.st_size,
                     "modificationTime": int(st.st_mtime * 1000),
                     "dataChange": True,
@@ -3369,17 +3346,6 @@ def _commit_optimize(
     compaction commit). Shared by the self-writing path and the
     UniForm ``data_files`` injection."""
 
-    def _part_vals(rel: str) -> dict[str, str]:
-        import urllib.parse
-
-        vals: dict[str, str] = {}
-        for comp in rel.split("/")[:-1]:
-            if "=" in comp:
-                k, _, raw = comp.partition("=")
-                if k in part_cols:
-                    vals[k] = urllib.parse.unquote(raw)
-        return vals
-
     actions: list[dict] = []
     for p in sorted(adds):
         actions.append(
@@ -3417,7 +3383,7 @@ def _commit_optimize(
         st = os.stat(os.path.join(path, f))
         add = {
             "path": f,
-            "partitionValues": _part_vals(f) if part_cols else {},
+            "partitionValues": _hive_partition_values(f, part_cols),
             "size": st.st_size,
             "modificationTime": int(st.st_mtime * 1000),
             "dataChange": False,

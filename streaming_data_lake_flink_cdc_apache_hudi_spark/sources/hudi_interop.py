@@ -292,6 +292,40 @@ def _pending_compactions(path: str) -> set[str]:
     }
 
 
+def _instant_meta(tl: str, name: str) -> dict:
+    """The commit-metadata JSON of timeline file ``name`` under ``tl``
+    ({} when empty or unreadable)."""
+    try:
+        with open(os.path.join(tl, name)) as fh:
+            raw = fh.read().strip()
+        return json.loads(raw) if raw else {}
+    except (OSError, ValueError):
+        return {}
+
+
+def _is_compaction_commit(tl: str, name: str) -> bool:
+    """Whether completed ``.commit`` file ``name`` is a compaction
+    (``compacted: true``) rather than a bulk-insert base commit."""
+    return bool(_instant_meta(tl, name).get("compacted"))
+
+
+def _deltas_since_last_compaction(path: str) -> int:
+    """Completed deltacommits newer than the last completed compaction
+    — the commit-count trigger of a compaction cadence."""
+    tl = os.path.join(path, _HOODIE)
+    last_comp = ""
+    deltas = []
+    for f in os.listdir(tl):
+        stem, _, suf = f.partition(".")
+        if not stem.isdigit():
+            continue
+        if suf == "deltacommit":
+            deltas.append(stem)
+        elif suf == "commit" and _is_compaction_commit(tl, f):
+            last_comp = max(last_comp, stem)
+    return sum(1 for d in deltas if d > last_comp)
+
+
 def _wait_for_pending_compaction(
     path: str, timeout: float = 300.0
 ) -> None:
@@ -343,12 +377,7 @@ def _evolved_extra_columns(
         inst = f[: -len(".deltacommit")]
         if not inst.isdigit() or (as_of is not None and inst > as_of):
             continue
-        try:
-            raw = open(os.path.join(tl, f)).read().strip()
-            meta = json.loads(raw) if raw else {}
-        except (OSError, ValueError):
-            continue
-        for c in meta.get("evolvedColumns") or []:
+        for c in _instant_meta(tl, f).get("evolvedColumns") or []:
             if c["name"] not in seen:
                 seen.add(c["name"])
                 out.append((c["name"], c["type"]))
@@ -987,12 +1016,7 @@ def read_hudi_changes(
         stem = f[: -len(".commit")]
         if stem not in in_range:
             continue
-        try:
-            raw = open(os.path.join(tl, f)).read().strip()
-            meta = json.loads(raw) if raw else {}
-        except (OSError, ValueError):
-            meta = {}
-        if not meta.get("compacted"):
+        if not _is_compaction_commit(tl, f):
             raise UnsupportedHudiFeature(
                 f"incremental read across non-compaction base commit "
                 f"{stem} (bulk insert) — read the snapshot instead"

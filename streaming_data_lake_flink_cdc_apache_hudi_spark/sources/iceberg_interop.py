@@ -42,6 +42,17 @@ serves all its rows. Remaining gate: an equality delete whose
 ``equality_ids`` can't be resolved against the table schema raises
 rather than resurrecting rows.
 
+Writers (export append, ``rewrite_manifests``, ``rewrite_data_files``,
+``delete_iceberg``, ``update_iceberg``, ``upsert_iceberg``) share ONE
+commit path: ``_open_parent`` reads the metadata, its version and the
+parent snapshot (branch head or current); ``_manifest_entry_schema``,
+``_added_entry`` and ``_write_manifest`` write the new manifests;
+``_manifest_list_row`` fills their rows against the table's own list
+schema; ``_commit_snapshot`` writes ``snap-<id>.avro`` and appends the
+snapshot on main or on a branch through ``_commit_metadata``'s
+put-if-absent. Only the initial export writes ``v1.metadata.json``
+itself.
+
 Scale notes: the metadata walk touches only KB-scale Avro files
 driver-side (the same footprint every Iceberg client has — that IS
 Iceberg's design: metadata small enough to read, data enumerated
@@ -797,20 +808,14 @@ def snapshots(path: str) -> list[dict]:
     ]
 
 
-# -- table maintenance (metadata-only commits) -------------------------------
-
-
-def _meta_base_version(path: str) -> int:
-    """The version number of the metadata file a writer is ABOUT TO
-    BUILD ON (the current one) — passed to :func:`_commit_metadata`
-    so the commit lands at exactly base+1 and a concurrent writer
-    that advanced the table first is DETECTED, not silently built
-    over from a stale read."""
-    m = re.match(
-        r"v(\d+)\.metadata\.json$",
-        os.path.basename(_current_metadata_path(path)),
-    )
-    return int(m.group(1)) if m else 0
+# -- the one commit path ----------------------------------------------------
+#
+# Every writer (export append, rewrite_manifests, rewrite_data_files,
+# delete/update/upsert) commits the same way: open the parent snapshot,
+# write its new manifests (one entry schema, one manifest writer), build
+# their manifest-list rows against the list schema the table already
+# uses, then append the snapshot on main or on a branch. Each Iceberg
+# decision below lives in exactly one helper.
 
 
 def _commit_metadata(
@@ -855,6 +860,334 @@ def _commit_metadata(
     with open(os.path.join(md, "version-hint.text"), "w") as fh:
         fh.write(str(v))
     return p
+
+
+def _new_snapshot_id() -> int:
+    return int(uuid.uuid4().int % (1 << 62))
+
+
+def _open_parent(
+    path: str,
+    what: str,
+    branch: str | None = None,
+    v2_reason: str | None = None,
+) -> tuple[dict, int, int, dict, dict]:
+    """``(meta, base_v, parent_id, snap, default_spec)`` a commit
+    builds on: the current table metadata and its version number
+    (``base_v``, the put-if-absent base the row-level writers pass to
+    :func:`_commit_metadata` so a concurrent writer that advanced the
+    table first is DETECTED), the parent snapshot — the ``branch`` head
+    when given, else the current snapshot — and the default partition
+    spec. ``v2_reason`` refuses format-version 1 tables, naming why."""
+    mpath = _current_metadata_path(path)
+    with open(mpath) as fh:
+        meta = json.load(fh)
+    m = re.match(r"v(\d+)\.metadata\.json$", os.path.basename(mpath))
+    base_v = int(m.group(1)) if m else 0
+    if v2_reason and int(meta.get("format-version", 1)) < 2:
+        raise UnsupportedIcebergFeature(
+            f"{what} needs format-version 2 — {v2_reason}"
+        )
+    cur = meta.get("current-snapshot-id")
+    if branch is not None:
+        # branch-scoped commit: the parent is the BRANCH head and the
+        # commit advances only refs[branch]
+        cur = _branch_head(meta, branch, what)
+    snap = next(
+        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
+        None,
+    )
+    if snap is None:
+        raise ValueError(f"Iceberg table at {path} has no current snapshot")
+    default_spec = next(
+        (
+            s
+            for s in meta.get("partition-specs", [])
+            if s.get("spec-id") == meta.get("default-spec-id", 0)
+        ),
+        (meta.get("partition-specs") or [{}])[0],
+    )
+    return meta, base_v, cur, snap, default_spec
+
+
+def _manifest_entry_schema(
+    fmt_version: int,
+    part_fields: Sequence[tuple[str, str, int]] = (),
+    equality_ids: bool = False,
+    stats: bool = False,
+) -> dict:
+    """The manifest-entry Avro schema of the manifests this module
+    writes: ``part_fields`` are the partition record's
+    ``(name, avro type, field-id)`` fields (optional, so a NULL
+    partition value encodes); v2 adds the REQUIRED ``data_file.content``
+    (Java v2 readers reject entries that omit it), ``equality_ids`` the
+    equality-delete field ids, ``stats`` the four Appendix-D per-file
+    stats maps."""
+    es = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
+    df_fields = es["fields"][2]["type"]["fields"]
+    if fmt_version == 2:
+        df_fields.insert(
+            1, {"name": "content", "type": "int", "field-id": 134}
+        )
+    if equality_ids:
+        df_fields.insert(
+            2,
+            {
+                "name": "equality_ids",
+                "type": ["null", {"type": "array", "items": "int"}],
+                "field-id": 135,
+            },
+        )
+    next(f for f in df_fields if f["name"] == "partition")["type"][
+        "fields"
+    ] = [
+        {"name": n, "type": ["null", t], "field-id": fid, "default": None}
+        for n, t, fid in part_fields
+    ]
+    if stats:
+        df_fields += _stats_map_schema_fields()
+    return es
+
+
+def _part_fields(pspecs: list[dict]) -> list[tuple[str, str, int]]:
+    """Partition record fields of parsed identity/bucket specs."""
+    return [
+        (ps["fname"], _PART_AVRO[ps["out_type"]], ps["fid"]) for ps in pspecs
+    ]
+
+
+def _added_entry(
+    sid: int,
+    full: str,
+    partition: dict,
+    content: int = 0,
+    equality_ids: list[int] | None = None,
+    stats: dict | None = None,
+    record_count: int | None = None,
+    size: int | None = None,
+) -> dict:
+    """One ADDED manifest entry (null sequence number: it inherits the
+    manifest's, the spec's inheritance rule ``_live_files`` applies).
+    Record count and size default to the file's footer and length;
+    fields the entry schema lacks (v1 ``content``, ``equality_ids``)
+    are ignored by the encoder."""
+    import pyarrow.parquet as pq
+
+    return {
+        "status": 1,
+        "snapshot_id": sid,
+        "data_file": {
+            "content": content,
+            "equality_ids": equality_ids,
+            # spec: file_path is a full URI, not a bare path
+            "file_path": "file://" + full,
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": (
+                pq.ParquetFile(full).metadata.num_rows
+                if record_count is None
+                else record_count
+            ),
+            "file_size_in_bytes": (
+                os.path.getsize(full) if size is None else size
+            ),
+            **(stats or {}),
+        },
+    }
+
+
+def _stats_maps(fs: dict, cols: list[tuple[str, int, str]]) -> dict:
+    """The four per-file stats maps (spec Appendix D) of one
+    ``filestats`` footer record over ``(name, field id, iceberg type)``
+    columns."""
+    vc, nvc, lo, hi = {}, {}, {}, {}
+    for c, fid, t in cols:
+        vc[fid] = fs["numRecords"]
+        if c in fs["nulls"]:
+            nvc[fid] = fs["nulls"][c]
+        if c in fs["min"] and c in fs["max"]:
+            try:
+                lo[fid] = _single_value_bytes(t, fs["min"][c])
+                hi[fid] = _single_value_bytes(t, fs["max"][c])
+            except (TypeError, ValueError):
+                pass  # unrenderable bound stays absent
+    return {
+        "value_counts": _kv(vc),
+        "null_value_counts": _kv(nvc),
+        "lower_bounds": _kv(lo),
+        "upper_bounds": _kv(hi),
+    }
+
+
+def _write_manifest(
+    path: str,
+    name: str,
+    entry_schema: dict,
+    entries: list[dict],
+    fmt_version: int,
+    spec_id: int,
+    spec_fields: list,
+    content: int = 0,
+    schema: dict | None = None,
+) -> str:
+    """Write ``metadata/<name>`` with the key-value metadata Java
+    manifest readers require (spec "Manifests": table schema,
+    partition spec and its id, format-version, content); ``schema``
+    defaults to the table's current schema. Returns the path."""
+    mp = os.path.join(path, _META_DIR, name)
+    write_avro(
+        mp,
+        entry_schema,
+        entries,
+        metadata={
+            "schema": json.dumps(
+                _current_schema(path) if schema is None else schema
+            ).encode(),
+            "schema-id": b"0",
+            "partition-spec": json.dumps(spec_fields).encode(),
+            "partition-spec-id": str(spec_id).encode(),
+            "format-version": str(fmt_version).encode(),
+            "content": b"data" if content == 0 else b"deletes",
+        },
+    )
+    return mp
+
+
+def _manifest_list_row(
+    mlist_schema: dict,
+    manifest_path: str,
+    spec_id: int,
+    sid: int,
+    seq: int,
+    content: int = 0,
+    added: tuple[int, int] = (0, 0),
+    existing: tuple[int, int] = (0, 0),
+    min_seq: int | None = None,
+    partitions: list | None = None,
+) -> dict:
+    """One manifest-list row for a manifest this snapshot wrote, filled
+    against ``mlist_schema`` (the list schema the table already uses,
+    so externally-written layouts keep their exact field set).
+    ``added``/``existing`` are (files, rows) counts."""
+    full = {
+        "manifest_path": "file://" + manifest_path,
+        "manifest_length": os.path.getsize(manifest_path),
+        "partition_spec_id": spec_id,
+        "added_snapshot_id": sid,
+        "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": seq if min_seq is None else min_seq,
+        "added_files_count": added[0],
+        "existing_files_count": existing[0],
+        "deleted_files_count": 0,
+        "added_rows_count": added[1],
+        "existing_rows_count": existing[1],
+        "deleted_rows_count": 0,
+        "partitions": partitions,
+    }
+    return {f["name"]: full.get(f["name"]) for f in mlist_schema["fields"]}
+
+
+def _partition_summaries(pspecs: list[dict], key: tuple) -> list | None:
+    """Manifest-list field summaries of a single-partition manifest
+    (contains_null + single-value-encoded bounds, lower == upper)."""
+    if not pspecs:
+        return None
+    return [
+        {
+            "contains_null": v is None,
+            "lower_bound": None
+            if v is None
+            else _single_value_bytes(ps["out_type"], v),
+            "upper_bound": None
+            if v is None
+            else _single_value_bytes(ps["out_type"], v),
+        }
+        for ps, v in zip(pspecs, key)
+    ]
+
+
+def _write_manifest_list(
+    path: str, sid: int, fmt_version: int, mlist_schema: dict, rows: list
+) -> str:
+    mlist = os.path.join(path, _META_DIR, f"snap-{sid}.avro")
+    write_avro(
+        mlist,
+        mlist_schema,
+        rows,
+        metadata={
+            "format-version": str(fmt_version).encode(),
+            "snapshot-id": str(sid).encode(),
+        },
+    )
+    return mlist
+
+
+def _commit_snapshot(
+    path: str,
+    meta: dict,
+    sid: int,
+    parent_id: int | None,
+    seq: int,
+    mlist_schema: dict,
+    mlist_rows: list,
+    summary: dict,
+    branch: str | None = None,
+    base_version: int | None = None,
+) -> None:
+    """Write ``snap-<sid>.avro`` and commit a snapshot over it: the
+    snapshot records its parent, the schema in effect (time travel
+    across later ADD-COLUMN evolution reads under it) and, in v2, its
+    sequence number. A ``branch`` commit advances ONLY that ref — the
+    main lineage and the snapshot-log (which tracks current-table-state
+    changes, per the spec) stay put; otherwise the snapshot becomes
+    current and extends the snapshot-log. ``base_version`` is passed
+    through to :func:`_commit_metadata`'s put-if-absent."""
+    fmt_version = int(meta.get("format-version", 1))
+    mlist = _write_manifest_list(path, sid, fmt_version, mlist_schema, mlist_rows)
+    now_ms = int(time.time() * 1000)
+    new_snap = {
+        "snapshot-id": sid,
+        "parent-snapshot-id": parent_id,
+        "timestamp-ms": now_ms,
+        "schema-id": int(meta.get("current-schema-id", 0)),
+        "manifest-list": "file://" + mlist,
+        "summary": summary,
+    }
+    new_meta = dict(meta)
+    if fmt_version == 2:
+        new_snap["sequence-number"] = seq
+        new_meta["last-sequence-number"] = seq
+    new_meta["last-updated-ms"] = now_ms
+    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
+    if branch is not None:
+        refs = dict(meta.get("refs") or {})
+        refs[branch] = {"snapshot-id": sid, "type": "branch"}
+        new_meta["refs"] = refs
+    else:
+        new_meta["current-snapshot-id"] = sid
+        new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
+            {"timestamp-ms": now_ms, "snapshot-id": sid}
+        ]
+    _commit_metadata(path, new_meta, base_version=base_version)
+
+
+def _data_files_on_disk(data_dir: str) -> set[str]:
+    """Every parquet file under ``data_dir``. Writers diff this set
+    around their distributed write to learn exactly the files it
+    produced (the ``optimize_delta._data_file_set`` shape) instead of
+    reconstructing prior references from snapshots: a stale file whose
+    only referencing snapshot is unreadable would otherwise be taken
+    for new output and committed, resurrecting dead rows."""
+    return {
+        os.path.join(root, f)
+        for root, _d, fs in os.walk(data_dir)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith("_")
+    }
+
+
+# -- table maintenance (metadata-only commits) -------------------------------
 
 
 def _snapshot_reachable(
@@ -1070,17 +1403,9 @@ def rewrite_manifests(
 
     Refuses across multiple partition-spec ids (entries would not fit
     one manifest schema). Returns before/after manifest counts."""
-    meta = json.load(open(_current_metadata_path(path)))
+    meta, _, cur, snap, _ = _open_parent(path, "rewrite_manifests")
     fmt_version = int(meta.get("format-version", 1))
-    cur = meta.get("current-snapshot-id")
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
-        None,
-    )
-    if snap is None:
-        raise ValueError(f"Iceberg table at {path} has no current snapshot")
-    mlist_path = _resolve(snap["manifest-list"], path)
-    mlist_schema, manifests = read_avro(mlist_path)
+    mlist_schema, manifests = read_avro(_resolve(snap["manifest-list"], path))
     data_manifests = [m for m in manifests if (m.get("content") or 0) == 0]
     passthrough = [m for m in manifests if (m.get("content") or 0) != 0]
     out = {
@@ -1135,7 +1460,7 @@ def rewrite_manifests(
     if stats:
         if spark is None:
             raise ValueError("rewrite_manifests(stats=True) needs spark")
-        fields_by_id = _fields_by_id(meta)
+        cols = [(n, fid, t) for fid, (n, t) in _fields_by_id(meta).items()]
         df_field = next(
             f for f in entry_schema["fields"] if f["name"] == "data_file"
         )
@@ -1166,23 +1491,7 @@ def rewrite_manifests(
             fs = footer.get(resolved[e["data_file"]["file_path"]])
             if fs is None:
                 continue
-            vc, nvc, lo, hi = {}, {}, {}, {}
-            for fid, (cname, t) in fields_by_id.items():
-                vc[fid] = fs["numRecords"]
-                if cname in fs["nulls"]:
-                    nvc[fid] = fs["nulls"][cname]
-                if cname in fs["min"] and cname in fs["max"]:
-                    try:
-                        lo[fid] = _single_value_bytes(t, fs["min"][cname])
-                        hi[fid] = _single_value_bytes(t, fs["max"][cname])
-                    except (TypeError, ValueError):
-                        pass
-            d = dict(e["data_file"])
-            d["value_counts"] = _kv(vc)
-            d["null_value_counts"] = _kv(nvc)
-            d["lower_bounds"] = _kv(lo)
-            d["upper_bounds"] = _kv(hi)
-            e["data_file"] = d
+            e["data_file"] = {**e["data_file"], **_stats_maps(fs, cols)}
             out["stats_backfilled"] += 1
     if fmt_version == 2 and not any(
         f["name"] == "sequence_number" for f in entry_schema["fields"]
@@ -1214,10 +1523,8 @@ def rewrite_manifests(
         if isinstance(dfv, dict):
             for f in df_schema_fields:
                 dfv.setdefault(f["name"], None)
-    new_sid = int(uuid.uuid4().int % (1 << 62))
+    new_sid = _new_snapshot_id()
     new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    md = os.path.join(path, _META_DIR)
-    manifest_path = os.path.join(md, f"manifest-{new_sid}-rw.avro")
     # the manifest's partition-spec metadata must describe the SPEC
     # THE ENTRIES USE — select by spec-id, not position (ADVICE r9:
     # an externally-written table whose current spec id is not 0,
@@ -1231,76 +1538,40 @@ def rewrite_manifests(
         ),
         (meta.get("partition-specs") or [{}])[0],
     )
-    write_avro(
-        manifest_path,
+    manifest_path = _write_manifest(
+        path,
+        f"manifest-{new_sid}-rw.avro",
         entry_schema,
         entries_out,
-        metadata={
-            "schema": json.dumps(_current_schema(path)).encode(),
-            "schema-id": b"0",
-            "partition-spec": json.dumps(
-                spec.get("fields", [])
-            ).encode(),
-            "partition-spec-id": str(target_spec_id).encode(),
-            "format-version": str(fmt_version).encode(),
-            "content": b"data",
-        },
+        fmt_version,
+        target_spec_id,
+        spec.get("fields", []),
     )
-    full_row = {
-        "manifest_path": "file://" + manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": sorted(spec_ids)[0],
-        "added_snapshot_id": new_sid,
-        "content": 0,
-        "sequence_number": new_seq,
-        "min_sequence_number": min_seq if min_seq is not None else 0,
-        "added_files_count": 0,
-        "existing_files_count": len(entries_out),
-        "deleted_files_count": 0,
-        "added_rows_count": 0,
-        "existing_rows_count": sum(
-            e["data_file"].get("record_count") or 0 for e in entries_out
+    new_row = _manifest_list_row(
+        mlist_schema,
+        manifest_path,
+        target_spec_id,
+        new_sid,
+        new_seq,
+        existing=(
+            len(entries_out),
+            sum(e["data_file"].get("record_count") or 0 for e in entries_out),
         ),
-        "deleted_rows_count": 0,
-        "partitions": None,
-    }
-    new_row = {
-        f["name"]: full_row.get(f["name"])
-        for f in mlist_schema["fields"]
-    }
-    new_mlist = os.path.join(md, f"snap-{new_sid}.avro")
-    write_avro(
-        new_mlist,
+        min_seq=min_seq if min_seq is not None else 0,
+    )
+    _commit_snapshot(
+        path,
+        meta,
+        new_sid,
+        cur,
+        new_seq,
         mlist_schema,
         [new_row] + passthrough,
-        metadata={
-            "format-version": str(fmt_version).encode(),
-            "snapshot-id": str(new_sid).encode(),
-        },
-    )
-    new_meta = dict(meta)
-    new_snap = {
-        "snapshot-id": new_sid,
-        "parent-snapshot-id": cur,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": "file://" + new_mlist,
-        "summary": {
+        {
             "operation": "replace",
             "compacted-manifests": str(len(data_manifests)),
         },
-    }
-    if fmt_version == 2:
-        new_snap["sequence-number"] = new_seq
-        new_meta["last-sequence-number"] = new_seq
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
-    new_meta["current-snapshot-id"] = new_sid
-    new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {
-            "timestamp-ms": new_snap["timestamp-ms"],
-            "snapshot-id": new_sid,
-        }
-    ]
-    _commit_metadata(path, new_meta)
+    )
     out["rewritten"] = len(entries_out)
     return out
 
@@ -1368,41 +1639,21 @@ def rewrite_data_files(
     Scale: one distributed read + one distributed write of the live
     data, KB-scale driver metadata — the same shape as any engine's
     compaction pass."""
-    import pyarrow.parquet as pq
-
     if sort_by and data_files is not None:
         raise ValueError(
             "sort_by rewrites the data itself — incompatible with "
             "data_files injection"
         )
-    if sort_by and (
-        json.load(open(_current_metadata_path(path)))
-        .get("partition-specs", [{}])[0]
-        .get("fields")
-    ):
+    meta, _, cur, snap, default_spec = _open_parent(
+        path, "rewrite_data_files"
+    )
+    if sort_by and meta.get("partition-specs", [{}])[0].get("fields"):
         raise UnsupportedIcebergFeature(
             "sort_by rewrite over a partitioned table — a hive "
             "partition already bounds its files; run the bin-pack "
             "rewrite instead"
         )
-
-    meta = json.load(open(_current_metadata_path(path)))
     fmt_version = int(meta.get("format-version", 1))
-    cur = meta.get("current-snapshot-id")
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
-        None,
-    )
-    if snap is None:
-        raise ValueError(f"Iceberg table at {path} has no current snapshot")
-    default_spec = next(
-        (
-            s
-            for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id", 0)
-        ),
-        (meta.get("partition-specs") or [{}])[0],
-    )
     # partitioned tables compact too (identity new r10, bucket new
     # r11): the rewrite regroups by the partition tuple (one task ->
     # one file per partition, the optimize_delta shape) and re-emits
@@ -1411,38 +1662,8 @@ def rewrite_data_files(
     # the in-repo golden-tested iceberg_bucket transform; other
     # transforms (truncate/date) refuse — rewrite_manifests still
     # compacts their metadata.
-    pfields = default_spec.get("fields", [])
-    names_by_id = _field_names_by_id(meta)
-    schema_types = {
-        f["name"]: f["type"] for f in _current_schema(path)["fields"]
-    }
-    pspecs: list[dict] = []
-    for pf in pfields:
-        tr = pf.get("transform")
-        bm = re.match(r"^bucket\[(\d+)\]$", tr or "")
-        if tr != "identity" and not bm:
-            raise UnsupportedIcebergFeature(
-                "rewrite_data_files over unsupported partition "
-                f"transform {tr!r} — "
-                "rewrite_manifests still compacts its metadata"
-            )
-        src = names_by_id.get(pf.get("source-id"))
-        t = schema_types.get(src)
-        if src is None or t not in _PART_AVRO:
-            raise UnsupportedIcebergFeature(
-                f"rewrite_data_files: partition field {pf.get('name')!r} "
-                f"has unresolvable source or type {t!r}"
-            )
-        pspecs.append(
-            {
-                "fname": pf["name"],
-                "src": src,
-                "src_type": t,
-                "out_type": "int" if bm else t,
-                "n": int(bm.group(1)) if bm else None,
-                "fid": int(pf.get("field-id", 1000)),
-            }
-        )
+    fields = _current_schema(path)["fields"]
+    pspecs = _parse_pspecs(meta, default_spec, fields, "rewrite_data_files")
     live, pos_del, eq_del = _live_files(path, cur)
     out = {
         "files_before": len(live),
@@ -1453,64 +1674,17 @@ def rewrite_data_files(
         return out  # already compact, nothing to materialize
     if data_files is None:
         data_dir = os.path.join(path, "data")
-        # diff the ON-DISK file set around the write (the
-        # optimize_delta._data_file_set shape) instead of
-        # reconstructing prior references from snapshots: a stale
-        # data file whose only referencing snapshot is unreadable
-        # would otherwise be misclassified as compaction output and
-        # swept into the replace snapshot, resurrecting dead rows
-        # (ADVICE r11)
-        def _on_disk() -> set:
-            return {
-                os.path.join(root, f)
-                for root, _d, fs in os.walk(data_dir)
-                for f in fs
-                if f.endswith(".parquet") and not f.startswith("_")
-            }
-
-        before_write = _on_disk()
+        before_write = _data_files_on_disk(data_dir)
         from pyspark.sql import functions as F
 
         w = read_iceberg(spark, path)
         if pspecs:
-            for ps in pspecs:
-                if ps["n"] is None:
-                    w = w.withColumn(
-                        f"_p_{ps['fname']}", F.col(ps["src"])
-                    )
-                else:
-                    # re-derive the bucket value (new r11) with the
-                    # golden-tested spec transform — per-batch Arrow
-                    # UDF, executors only
-                    from pyspark.sql.functions import pandas_udf
-
-                    def _make_bkt(nb, st):
-                        @pandas_udf("int")
-                        def _bkt(s: pd.Series) -> pd.Series:
-                            # pd.isna, not `is None`: Arrow hands a
-                            # nullable int column to pandas as
-                            # float64 with NaN
-                            return s.map(
-                                lambda v: None
-                                if pd.isna(v)
-                                else iceberg_bucket(v, st, nb)
-                            ).astype("Int32")
-
-                        return _bkt
-
-                    w = w.withColumn(
-                        f"_p_{ps['fname']}",
-                        _make_bkt(ps["n"], ps["src_type"])(
-                            F.col(ps["src"])
-                        ),
-                    )
-            shadows = [f"_p_{ps['fname']}" for ps in pspecs]
+            w, shadows = _with_partition_shadows(w, pspecs)
             # repartition ON the partition tuple: one task per value
             # -> exactly one compacted file per partition dir
-            w = w.repartition(*[F.col(c) for c in shadows])
-            w.write.partitionBy(*shadows).mode("append").parquet(
-                data_dir
-            )
+            w.repartition(*shadows).write.partitionBy(*shadows).mode(
+                "append"
+            ).parquet(data_dir)
         elif sort_by:
             missing = [c for c in sort_by if c not in w.columns]
             if missing:
@@ -1528,7 +1702,7 @@ def rewrite_data_files(
             )
         else:
             w.coalesce(1).write.mode("append").parquet(data_dir)
-        new_files = sorted(_on_disk() - before_write)
+        new_files = sorted(_data_files_on_disk(data_dir) - before_write)
     else:
         new_files = [os.path.abspath(f) for f in sorted(data_files)]
         if (pos_del or eq_del) and not deletes_applied:
@@ -1542,89 +1716,41 @@ def rewrite_data_files(
     if not new_files:
         raise RuntimeError("rewrite_data_files wrote no parquet files")
 
-    new_sid = int(uuid.uuid4().int % (1 << 62))
+    new_sid = _new_snapshot_id()
     new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(time.time() * 1000)
-    md = os.path.join(path, _META_DIR)
-    entry_schema = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
-    if fmt_version == 2:
-        entry_schema["fields"][2]["type"]["fields"].insert(
-            1, {"name": "content", "type": "int", "field-id": 134}
-        )
+    entry_schema = _manifest_entry_schema(
+        fmt_version, _part_fields(pspecs), stats=stats
+    )
     rw_stats: dict[str, dict] = {}
-    rw_ice_types: dict[str, str] = {}
-    rw_field_ids: dict[str, int] = {}
+    cols = [
+        (f["name"], f["id"], f["type"])
+        for f in fields
+        if isinstance(f["type"], str)
+    ]
     if stats:
         from .filestats import parquet_footer_stats
 
-        entry_schema["fields"][2]["type"]["fields"] += (
-            _stats_map_schema_fields()
-        )
         rw_stats = parquet_footer_stats(spark, list(new_files))
-        for f in _current_schema(path)["fields"]:
-            if isinstance(f["type"], str):
-                rw_ice_types[f["name"]] = f["type"]
-                rw_field_ids[f["name"]] = f["id"]
-    if pspecs:
-        part_rec = next(
-            fl
-            for fl in entry_schema["fields"][2]["type"]["fields"]
-            if fl["name"] == "partition"
-        )
-        part_rec["type"]["fields"] = [
-            {
-                "name": ps["fname"],
-                "type": ["null", _PART_AVRO[ps["out_type"]]],
-                "field-id": ps["fid"],
-                "default": None,
-            }
-            for ps in pspecs
-        ]
-
-    def _pvals(full: str) -> dict:
-        import urllib.parse
-
-        types = {ps["fname"]: ps["out_type"] for ps in pspecs}
-        vals: dict = {}
-        rel = os.path.relpath(
-            os.path.abspath(full), os.path.abspath(path)
-        )
-        for comp in rel.split(os.sep)[:-1]:
-            if "=" not in comp:
-                continue
-            k, _, raw = comp.partition("=")
-            # the exporter's own layout shadows partition dirs as
-            # `_p_<field>=`; an injected UniForm layout uses the bare
-            # hive `<field>=` convention — accept both
-            c = k[len("_p_"):] if k.startswith("_p_") else k
-            if c not in types:
-                continue
-            raw = urllib.parse.unquote(raw)
-            if raw == "__HIVE_DEFAULT_PARTITION__":
-                vals[c] = None
-            else:
-                vals[c] = int(raw) if types[c] != "string" else raw
-        missing = [f for f in types if f not in vals]
-        if missing:
-            raise UnsupportedIcebergFeature(
-                f"rewrite_data_files: file {full!r} carries no "
-                f"{missing} partition path segment"
-            )
-        return vals
-
     # one manifest per partition tuple (entries carry real partition
     # structs, the list rows carry the bound summaries planners prune
     # on) — exactly the exporter's two pruning levels; unpartitioned
-    # tables collapse to the single () group
+    # tables collapse to the single () group. Partition values parse
+    # from the files' `_p_<field>=` (own layout) or bare hive
+    # `<field>=` (injected UniForm layout) path segments.
     by_part: dict[tuple, list[str]] = {}
     for full in new_files:
-        vals = _pvals(full) if pspecs else {}
+        vals = (
+            _pvals_from_path(full, path, pspecs, "rewrite_data_files")
+            if pspecs
+            else {}
+        )
         key = tuple(vals.get(ps["fname"]) for ps in pspecs)
         by_part.setdefault(key, []).append(full)
     # the new manifest list reuses the table's OWN list schema (like
     # rewrite_manifests) so externally-written layouts keep their
     # exact field set; delete manifests are NOT carried forward
     mlist_schema, _ = read_avro(_resolve(snap["manifest-list"], path))
+    spec_id = default_spec.get("spec-id", 0)
     mlist_rows = []
     total_rows = 0
     for gi, (key, group) in enumerate(
@@ -1633,143 +1759,58 @@ def rewrite_data_files(
             key=lambda kv: tuple((x is None, x) for x in kv[0]),
         )
     ):
-        entries = []
-        for full in sorted(group):
-            data_file = {
-                "file_path": "file://" + full,
-                "file_format": "PARQUET",
-                "partition": dict(
-                    zip((ps["fname"] for ps in pspecs), key)
+        part = dict(zip((ps["fname"] for ps in pspecs), key))
+        entries = [
+            _added_entry(
+                new_sid,
+                full,
+                part,
+                stats=(
+                    _stats_maps(rw_stats[full], cols)
+                    if full in rw_stats
+                    else None
                 ),
-                "record_count": pq.ParquetFile(full).metadata.num_rows,
-                "file_size_in_bytes": os.path.getsize(full),
-            }
-            if fmt_version == 2:
-                data_file["content"] = 0
-            if stats and full in rw_stats:
-                fs = rw_stats[full]
-                vc, nvc, lo, hi = {}, {}, {}, {}
-                for c, fid in rw_field_ids.items():
-                    t = rw_ice_types[c]
-                    vc[fid] = fs["numRecords"]
-                    if c in fs["nulls"]:
-                        nvc[fid] = fs["nulls"][c]
-                    if c in fs["min"] and c in fs["max"]:
-                        try:
-                            lo[fid] = _single_value_bytes(
-                                t, fs["min"][c]
-                            )
-                            hi[fid] = _single_value_bytes(
-                                t, fs["max"][c]
-                            )
-                        except (TypeError, ValueError):
-                            pass  # unrenderable bound stays absent
-                data_file["value_counts"] = _kv(vc)
-                data_file["null_value_counts"] = _kv(nvc)
-                data_file["lower_bounds"] = _kv(lo)
-                data_file["upper_bounds"] = _kv(hi)
-            entries.append(
-                # ADDED entries with null seq inherit the manifest's —
-                # the spec's inheritance rule _live_files implements
-                {
-                    "status": 1,
-                    "snapshot_id": new_sid,
-                    "data_file": data_file,
-                }
             )
-        manifest_path = os.path.join(
-            md, f"manifest-{new_sid}-rdf-{gi}.avro"
-        )
-        write_avro(
-            manifest_path,
+            for full in sorted(group)
+        ]
+        manifest_path = _write_manifest(
+            path,
+            f"manifest-{new_sid}-rdf-{gi}.avro",
             entry_schema,
             entries,
-            metadata={
-                "schema": json.dumps(_current_schema(path)).encode(),
-                "schema-id": b"0",
-                "partition-spec": json.dumps(
-                    default_spec.get("fields", [])
-                ).encode(),
-                "partition-spec-id": str(
-                    default_spec.get("spec-id", 0)
-                ).encode(),
-                "format-version": str(fmt_version).encode(),
-                "content": b"data",
-            },
+            fmt_version,
+            spec_id,
+            default_spec.get("fields", []),
         )
         group_rows = sum(
             e["data_file"]["record_count"] for e in entries
         )
         total_rows += group_rows
-        full_row = {
-            "manifest_path": "file://" + manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": default_spec.get("spec-id", 0),
-            "added_snapshot_id": new_sid,
-            "content": 0,
-            "sequence_number": new_seq,
-            "min_sequence_number": new_seq,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": group_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": (
-                [
-                    {
-                        "contains_null": v is None,
-                        "lower_bound": None
-                        if v is None
-                        else _single_value_bytes(ps["out_type"], v),
-                        "upper_bound": None
-                        if v is None
-                        else _single_value_bytes(ps["out_type"], v),
-                    }
-                    for ps, v in zip(pspecs, key)
-                ]
-                if pspecs
-                else None
-            ),
-        }
         mlist_rows.append(
-            {
-                f["name"]: full_row.get(f["name"])
-                for f in mlist_schema["fields"]
-            }
+            _manifest_list_row(
+                mlist_schema,
+                manifest_path,
+                spec_id,
+                new_sid,
+                new_seq,
+                added=(len(entries), group_rows),
+                partitions=_partition_summaries(pspecs, key),
+            )
         )
-    new_mlist = os.path.join(md, f"snap-{new_sid}.avro")
-    write_avro(
-        new_mlist,
+    _commit_snapshot(
+        path,
+        meta,
+        new_sid,
+        cur,
+        new_seq,
         mlist_schema,
         mlist_rows,
-        metadata={
-            "format-version": str(fmt_version).encode(),
-            "snapshot-id": str(new_sid).encode(),
-        },
-    )
-    new_snap = {
-        "snapshot-id": new_sid,
-        "parent-snapshot-id": cur,
-        "timestamp-ms": now_ms,
-        "manifest-list": "file://" + new_mlist,
-        "summary": {
+        {
             "operation": "replace",
             "rewritten-data-files": str(len(live)),
             "added-data-files": str(len(new_files)),
         },
-    }
-    new_meta = dict(meta)
-    if fmt_version == 2:
-        new_snap["sequence-number"] = new_seq
-        new_meta["last-sequence-number"] = new_seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
-    new_meta["current-snapshot-id"] = new_sid
-    new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": new_sid}
-    ]
-    _commit_metadata(path, new_meta)
+    )
     out["files_after"] = len(new_files)
     out["rewritten_rows"] = total_rows
     return out
@@ -1919,29 +1960,14 @@ def delete_iceberg(
     writes its own file's delete parquet; the driver sees one
     KB-scale descriptor row per touched file, and the commit is a
     metadata append (existing manifests are NOT rewritten)."""
-    from pyspark.sql import functions as F
-
     if not _allow_uniform:
         _refuse_uniform_iceberg(path, "delete_iceberg")
-    meta = json.load(open(_current_metadata_path(path)))
-    base_v = _meta_base_version(path)
-    fmt_version = int(meta.get("format-version", 1))
-    if fmt_version < 2:
-        raise UnsupportedIcebergFeature(
-            "delete_iceberg needs format-version 2 — v1 has no "
-            "sequence numbers to scope position deletes"
-        )
-    cur = meta.get("current-snapshot-id")
-    if branch is not None:
-        # branch-scoped delete (new r12): the parent is the BRANCH
-        # head; the commit advances only refs[branch]
-        cur = _branch_head(meta, branch, "delete_iceberg")
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
-        None,
+    meta, base_v, cur, snap, default_spec = _open_parent(
+        path,
+        "delete_iceberg",
+        branch,
+        v2_reason="v1 has no sequence numbers to scope position deletes",
     )
-    if snap is None:
-        raise ValueError(f"Iceberg table at {path} has no current snapshot")
     mapping, pos_files, eq_deletes = _live_files(path, cur)
     if not mapping:
         raise FileNotFoundError(
@@ -1958,19 +1984,8 @@ def delete_iceberg(
     touched = _posdel_files(spark, path, matched, mapping, "delete_iceberg")
     if not touched:
         return {"snapshot_id": None, "deleted_rows": 0, "files_touched": 0}
-    default_spec = next(
-        (
-            s
-            for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id", 0)
-        ),
-        (meta.get("partition-specs") or [{}])[0],
-    )
     pfields = default_spec.get("fields", [])
-    entry_schema = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
-    entry_schema["fields"][2]["type"]["fields"].insert(
-        1, {"name": "content", "type": "int", "field-id": 134}
-    )
+    part_fields = []
     if pfields:
         # partition values are COPIED from the data files' own
         # manifest structs (partition-scoped deletes) — no transform
@@ -1982,131 +1997,73 @@ def delete_iceberg(
             f["name"]: f["type"] for f in _current_schema(path)["fields"]
         }
         sample = next(iter(mapping.values()))[2]
-
-        def _ptype(pf: dict) -> str:
+        for pf in pfields:
             tr = pf.get("transform")
-            if tr == "identity":
-                t = schema_types.get(names_by_id.get(pf.get("source-id")))
-                if t in _PART_AVRO:
-                    return _PART_AVRO[t]
+            t = schema_types.get(names_by_id.get(pf.get("source-id")))
+            if tr == "identity" and t in _PART_AVRO:
+                t = _PART_AVRO[t]
             elif re.match(r"^bucket\[\d+\]$", tr or ""):
-                return "int"
-            v = sample.get(pf["name"])
-            return "string" if isinstance(v, str) else "long"
-
-        part_rec = next(
-            fl
-            for fl in entry_schema["fields"][2]["type"]["fields"]
-            if fl["name"] == "partition"
-        )
-        part_rec["type"]["fields"] = [
-            {
-                "name": pf["name"],
-                "type": ["null", _ptype(pf)],
-                "field-id": int(pf.get("field-id", 1000)),
-                "default": None,
-            }
-            for pf in pfields
-        ]
-    new_sid = int(uuid.uuid4().int % (1 << 62))
+                t = "int"
+            else:
+                v = sample.get(pf["name"])
+                t = "string" if isinstance(v, str) else "long"
+            part_fields.append(
+                (pf["name"], t, int(pf.get("field-id", 1000)))
+            )
+    new_sid = _new_snapshot_id()
     new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(time.time() * 1000)
-    md = os.path.join(path, _META_DIR)
-    entries = []
-    deleted = 0
-    for r in sorted(touched, key=lambda r: r["recorded"]):
-        deleted += int(r["n"])
-        part = dict(mapping[r["recorded"]][2]) if pfields else {}
-        entries.append(
-            # ADDED entries with null seq inherit the manifest's
-            {
-                "status": 1,
-                "snapshot_id": new_sid,
-                "data_file": {
-                    "content": 1,
-                    "file_path": "file://" + r["file"],
-                    "file_format": "PARQUET",
-                    "partition": part,
-                    "record_count": int(r["n"]),
-                    "file_size_in_bytes": int(r["size"]),
-                },
-            }
+    touched = sorted(touched, key=lambda r: r["recorded"])
+    deleted = sum(int(r["n"]) for r in touched)
+    entries = [
+        _added_entry(
+            new_sid,
+            r["file"],
+            dict(mapping[r["recorded"]][2]) if pfields else {},
+            content=1,
+            record_count=int(r["n"]),
+            size=int(r["size"]),
         )
-    manifest_path = os.path.join(md, f"manifest-{new_sid}-del.avro")
-    write_avro(
-        manifest_path,
-        entry_schema,
+        for r in touched
+    ]
+    spec_id = default_spec.get("spec-id", 0)
+    manifest_path = _write_manifest(
+        path,
+        f"manifest-{new_sid}-del.avro",
+        _manifest_entry_schema(2, part_fields),
         entries,
-        metadata={
-            "schema": json.dumps(_current_schema(path)).encode(),
-            "schema-id": b"0",
-            "partition-spec": json.dumps(pfields).encode(),
-            "partition-spec-id": str(
-                default_spec.get("spec-id", 0)
-            ).encode(),
-            "format-version": b"2",
-            "content": b"deletes",
-        },
+        2,
+        spec_id,
+        pfields,
+        content=1,
     )
     mlist_schema, old_rows = read_avro(_resolve(snap["manifest-list"], path))
-    del_row_full = {
-        "manifest_path": "file://" + manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": default_spec.get("spec-id", 0),
-        "added_snapshot_id": new_sid,
-        "content": 1,
-        "sequence_number": new_seq,
-        "min_sequence_number": new_seq,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": deleted,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "partitions": None,
-    }
-    mlist_rows = list(old_rows) + [
-        {
-            f["name"]: del_row_full.get(f["name"])
-            for f in mlist_schema["fields"]
-        }
-    ]
-    new_mlist = os.path.join(md, f"snap-{new_sid}.avro")
-    write_avro(
-        new_mlist,
+    _commit_snapshot(
+        path,
+        meta,
+        new_sid,
+        cur,
+        new_seq,
         mlist_schema,
-        mlist_rows,
-        metadata={
-            "format-version": b"2",
-            "snapshot-id": str(new_sid).encode(),
-        },
-    )
-    new_snap = {
-        "snapshot-id": new_sid,
-        "parent-snapshot-id": cur,
-        "sequence-number": new_seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": "file://" + new_mlist,
-        "summary": {
+        list(old_rows)
+        + [
+            _manifest_list_row(
+                mlist_schema,
+                manifest_path,
+                spec_id,
+                new_sid,
+                new_seq,
+                content=1,
+                added=(len(entries), deleted),
+            )
+        ],
+        {
             "operation": "delete",
             "added-delete-files": str(len(entries)),
             "added-position-deletes": str(deleted),
         },
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = new_seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
-    if branch is not None:
-        refs = dict(meta.get("refs") or {})
-        refs[branch] = {"snapshot-id": new_sid, "type": "branch"}
-        new_meta["refs"] = refs
-    else:
-        new_meta["current-snapshot-id"] = new_sid
-        new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now_ms, "snapshot-id": new_sid}
-        ]
-    _commit_metadata(path, new_meta, base_version=base_v)
+        branch=branch,
+        base_version=base_v,
+    )
     return {
         "snapshot_id": new_sid,
         "deleted_rows": deleted,
@@ -2153,34 +2110,15 @@ def update_iceberg(
     are written on executors; the rewritten rows go through the
     distributed parquet writer; the commit appends two manifests to
     the carried-forward manifest list — KB-scale driver work."""
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     if not _allow_uniform:
         _refuse_uniform_iceberg(path, "update_iceberg")
-    meta = json.load(open(_current_metadata_path(path)))
-    base_v = _meta_base_version(path)
-    if int(meta.get("format-version", 1)) < 2:
-        raise UnsupportedIcebergFeature(
-            "update_iceberg needs format-version 2 — v1 has no "
-            "sequence numbers to scope position deletes"
-        )
-    cur = meta.get("current-snapshot-id")
-    if branch is not None:
-        cur = _branch_head(meta, branch, "update_iceberg")
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
-        None,
-    )
-    if snap is None:
-        raise ValueError(f"Iceberg table at {path} has no current snapshot")
-    default_spec = next(
-        (
-            s
-            for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id", 0)
-        ),
-        (meta.get("partition-specs") or [{}])[0],
+    meta, base_v, cur, snap, default_spec = _open_parent(
+        path,
+        "update_iceberg",
+        branch,
+        v2_reason="v1 has no sequence numbers to scope position deletes",
     )
     fields = _current_schema(path).get("fields", [])
     # partitioned tables (new r12): the rewritten rows write per
@@ -2234,198 +2172,101 @@ def update_iceberg(
         ]
     )
     data_dir = os.path.join(path, "data")
-
-    def _on_disk() -> set:
-        return {
-            os.path.join(root, f)
-            for root, _d, fs in os.walk(data_dir)
-            for f in fs
-            if f.endswith(".parquet") and not f.startswith("_")
-        }
-
-    before = _on_disk()
+    before = _data_files_on_disk(data_dir)
     if pspecs:
         _write_partitioned_data(new_rows, data_dir, pspecs)
     else:
         new_rows.write.mode("append").parquet(data_dir)
-    new_data = sorted(_on_disk() - before)
+    new_data = sorted(_data_files_on_disk(data_dir) - before)
 
-    new_sid = int(uuid.uuid4().int % (1 << 62))
+    new_sid = _new_snapshot_id()
     new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(time.time() * 1000)
-    md = os.path.join(path, _META_DIR)
-    spec_fields = [
-        {
-            "name": ps["fname"],
-            "transform": "identity"
-            if ps["n"] is None
-            else f"bucket[{ps['n']}]",
-            "source-id": next(
-                int(f["id"]) for f in fields if f["name"] == ps["src"]
-            ),
-            "field-id": ps["fid"],
-        }
-        for ps in pspecs
+    spec_id = default_spec.get("spec-id", 0)
+    entry_schema = _manifest_entry_schema(2, _part_fields(pspecs))
+    data_entries = [
+        _added_entry(
+            new_sid,
+            f,
+            _pvals_from_path(f, path, pspecs, "update_iceberg")
+            if pspecs
+            else {},
+        )
+        for f in new_data
     ]
-
-    def _entry_schema() -> dict:
-        es = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
-        es["fields"][2]["type"]["fields"].insert(
-            1, {"name": "content", "type": "int", "field-id": 134}
-        )
-        if pspecs:
-            part_rec = next(
-                fl
-                for fl in es["fields"][2]["type"]["fields"]
-                if fl["name"] == "partition"
-            )
-            part_rec["type"]["fields"] = [
-                {
-                    "name": ps["fname"],
-                    "type": ["null", _PART_AVRO[ps["out_type"]]],
-                    "field-id": ps["fid"],
-                    "default": None,
-                }
-                for ps in pspecs
-            ]
-        return es
-
-    def _mk_manifest(
-        name: str,
-        file_rows: list[tuple[str, int, int, dict]],
-        content: int,
-    ) -> tuple[str, int]:
-        entries, rows = [], 0
-        for full, nr, size, part in file_rows:
-            rows += nr
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": new_sid,
-                    "data_file": {
-                        "content": content,
-                        "file_path": "file://" + full,
-                        "file_format": "PARQUET",
-                        "partition": part,
-                        "record_count": nr,
-                        "file_size_in_bytes": size,
-                    },
-                }
-            )
-        mp = os.path.join(md, name)
-        write_avro(
-            mp,
-            _entry_schema(),
-            entries,
-            metadata={
-                "schema": json.dumps(_current_schema(path)).encode(),
-                "schema-id": b"0",
-                "partition-spec": json.dumps(spec_fields).encode(),
-                "partition-spec-id": str(
-                    default_spec.get("spec-id", 0)
-                ).encode(),
-                "format-version": b"2",
-                "content": b"data" if content == 0 else b"deletes",
-            },
-        )
-        return mp, rows
-
-    data_mp, updated = _mk_manifest(
-        f"manifest-{new_sid}-upd-data.avro",
-        [
-            (
-                f,
-                pq.ParquetFile(f).metadata.num_rows,
-                os.path.getsize(f),
-                _pvals_from_path(f, path, pspecs, "update_iceberg")
-                if pspecs
-                else {},
-            )
-            for f in new_data
-        ],
-        0,
-    )
     # delete entries copy each data file's partition struct from the
     # snapshot mapping (partition-scoped deletes, like delete_iceberg)
-    del_mp, del_positions = _mk_manifest(
+    touched = sorted(touched, key=lambda r: r["recorded"])
+    del_entries = [
+        _added_entry(
+            new_sid,
+            r["file"],
+            dict(mapping[r["recorded"]][2]) if pspecs else {},
+            content=1,
+            record_count=int(r["n"]),
+            size=int(r["size"]),
+        )
+        for r in touched
+    ]
+    updated = sum(e["data_file"]["record_count"] for e in data_entries)
+    del_positions = sum(int(r["n"]) for r in touched)
+    spec_fields = default_spec.get("fields", [])
+    data_mp = _write_manifest(
+        path,
+        f"manifest-{new_sid}-upd-data.avro",
+        entry_schema,
+        data_entries,
+        2,
+        spec_id,
+        spec_fields,
+    )
+    del_mp = _write_manifest(
+        path,
         f"manifest-{new_sid}-upd-del.avro",
-        [
-            (
-                r["file"],
-                int(r["n"]),
-                int(r["size"]),
-                dict(mapping[r["recorded"]][2]) if pspecs else {},
-            )
-            for r in sorted(touched, key=lambda r: r["recorded"])
-        ],
-        1,
+        entry_schema,
+        del_entries,
+        2,
+        spec_id,
+        spec_fields,
+        content=1,
     )
     mlist_schema, old_mrows = read_avro(_resolve(snap["manifest-list"], path))
-
-    def _mlist_row(mp: str, content: int, n_files: int, n_rows: int):
-        full = {
-            "manifest_path": "file://" + mp,
-            "manifest_length": os.path.getsize(mp),
-            "partition_spec_id": default_spec.get("spec-id", 0),
-            "added_snapshot_id": new_sid,
-            "content": content,
-            "sequence_number": new_seq,
-            "min_sequence_number": new_seq,
-            "added_files_count": n_files,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": None,
-        }
-        return {
-            f["name"]: full.get(f["name"])
-            for f in mlist_schema["fields"]
-        }
-
-    mlist_rows = list(old_mrows) + [
-        _mlist_row(data_mp, 0, len(new_data), updated),
-        _mlist_row(del_mp, 1, len(touched), del_positions),
-    ]
-    new_mlist = os.path.join(md, f"snap-{new_sid}.avro")
-    write_avro(
-        new_mlist,
+    _commit_snapshot(
+        path,
+        meta,
+        new_sid,
+        cur,
+        new_seq,
         mlist_schema,
-        mlist_rows,
-        metadata={
-            "format-version": b"2",
-            "snapshot-id": str(new_sid).encode(),
-        },
-    )
-    new_snap = {
-        "snapshot-id": new_sid,
-        "parent-snapshot-id": cur,
-        "sequence-number": new_seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": "file://" + new_mlist,
-        "summary": {
+        list(old_mrows)
+        + [
+            _manifest_list_row(
+                mlist_schema,
+                data_mp,
+                spec_id,
+                new_sid,
+                new_seq,
+                added=(len(new_data), updated),
+            ),
+            _manifest_list_row(
+                mlist_schema,
+                del_mp,
+                spec_id,
+                new_sid,
+                new_seq,
+                content=1,
+                added=(len(touched), del_positions),
+            ),
+        ],
+        {
             "operation": "overwrite",
             "added-data-files": str(len(new_data)),
             "added-delete-files": str(len(touched)),
             "added-position-deletes": str(del_positions),
             "added-records": str(updated),
         },
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = new_seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
-    if branch is not None:
-        refs = dict(meta.get("refs") or {})
-        refs[branch] = {"snapshot-id": new_sid, "type": "branch"}
-        new_meta["refs"] = refs
-    else:
-        new_meta["current-snapshot-id"] = new_sid
-        new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now_ms, "snapshot-id": new_sid}
-        ]
-    _commit_metadata(path, new_meta, base_version=base_v)
+        branch=branch,
+        base_version=base_v,
+    )
     return {
         "snapshot_id": new_sid,
         "updated_rows": updated,
@@ -2777,7 +2618,8 @@ def _parse_pspecs(
 ) -> list[dict]:
     """Parsed partition-field specs for the writers (identity +
     bucket transforms, the exporter's surface) — shared by
-    :func:`upsert_iceberg` and :func:`update_iceberg`."""
+    :func:`rewrite_data_files`, :func:`upsert_iceberg` and
+    :func:`update_iceberg`."""
     names_by_id = _field_names_by_id(meta)
     schema_types = {f["name"]: f["type"] for f in fields}
     pspecs: list[dict] = []
@@ -2786,7 +2628,7 @@ def _parse_pspecs(
         bm = re.match(r"^bucket\[(\d+)\]$", tr or "")
         if tr != "identity" and not bm:
             raise UnsupportedIcebergFeature(
-                f"{what} over partition transform {tr!r}"
+                f"{what} over unsupported partition transform {tr!r}"
             )
         src = names_by_id.get(pf.get("source-id"))
         t = schema_types.get(src)
@@ -2808,39 +2650,48 @@ def _parse_pspecs(
     return pspecs
 
 
-def _write_partitioned_data(
-    df: DataFrame, data_dir: str, pspecs: list[dict]
-) -> None:
-    """Distributed data write under identity/bucket shadow ``_p_*``
-    hive dirs (the exporter's layout; source columns stay in the
-    files) — shared by the writers."""
+def _with_partition_shadows(
+    df: DataFrame, pspecs: list[dict]
+) -> tuple[DataFrame, list[str]]:
+    """``df`` plus one shadow ``_p_<field>`` column per partition field
+    and the shadow names — the exporter's hive layout (source columns
+    stay in the files). Identity copies the source column; a bucket
+    value comes from the golden-tested spec transform in an
+    Arrow-batched pandas UDF (executors only). Shared by every writer;
+    each keeps its own repartition/write call."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
+    def _make_bkt(nb, st):
+        @pandas_udf("int")
+        def _bkt(s: pd.Series) -> pd.Series:
+            # pd.isna, not `is None`: Arrow hands a nullable int
+            # column to pandas as float64 with NaN
+            return s.map(
+                lambda v: None if pd.isna(v) else iceberg_bucket(v, st, nb)
+            ).astype("Int32")
+
+        return _bkt
+
     w = df
     for ps in pspecs:
-        if ps["n"] is None:
-            w = w.withColumn(f"_p_{ps['fname']}", F.col(ps["src"]))
-        else:
+        src = F.col(ps["src"])
+        w = w.withColumn(
+            f"_p_{ps['fname']}",
+            src
+            if ps["n"] is None
+            else _make_bkt(ps["n"], ps["src_type"])(src),
+        )
+    return w, [f"_p_{ps['fname']}" for ps in pspecs]
 
-            def _make_bkt(nb, st):
-                @pandas_udf("int")
-                def _bkt(s: pd.Series) -> pd.Series:
-                    return s.map(
-                        lambda v: None
-                        if pd.isna(v)
-                        else iceberg_bucket(v, st, nb)
-                    ).astype("Int32")
 
-                return _bkt
-
-            w = w.withColumn(
-                f"_p_{ps['fname']}",
-                _make_bkt(ps["n"], ps["src_type"])(F.col(ps["src"])),
-            )
-    w.write.partitionBy(
-        *(f"_p_{ps['fname']}" for ps in pspecs)
-    ).mode("append").parquet(data_dir)
+def _write_partitioned_data(
+    df: DataFrame, data_dir: str, pspecs: list[dict]
+) -> None:
+    """Distributed append under the shadow ``_p_*`` hive dirs —
+    :func:`update_iceberg`'s and :func:`upsert_iceberg`'s data side."""
+    w, shadows = _with_partition_shadows(df, pspecs)
+    w.write.partitionBy(*shadows).mode("append").parquet(data_dir)
 
 
 def _pvals_from_path(
@@ -2925,36 +2776,16 @@ def upsert_iceberg(
     nondeterministic source); the commit is a metadata append —
     existing manifests are carried forward untouched, KB-scale
     driver work."""
-    import pyarrow.parquet as pq
-
     from pyspark.sql import functions as F
 
     if not _allow_uniform:
         _refuse_uniform_iceberg(path, "upsert_iceberg")
 
-    meta = json.load(open(_current_metadata_path(path)))
-    base_v = _meta_base_version(path)
-    if int(meta.get("format-version", 1)) < 2:
-        raise UnsupportedIcebergFeature(
-            "upsert_iceberg needs format-version 2 — equality "
-            "deletes need sequence numbers"
-        )
-    cur = meta.get("current-snapshot-id")
-    if branch is not None:
-        cur = _branch_head(meta, branch, "upsert_iceberg")
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
-        None,
-    )
-    if snap is None:
-        raise ValueError(f"Iceberg table at {path} has no current snapshot")
-    default_spec = next(
-        (
-            s
-            for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id", 0)
-        ),
-        (meta.get("partition-specs") or [{}])[0],
+    meta, base_v, cur, snap, default_spec = _open_parent(
+        path,
+        "upsert_iceberg",
+        branch,
+        v2_reason="equality deletes need sequence numbers",
     )
     fields = _current_schema(path).get("fields", [])
     ids_by_name = {f["name"]: int(f["id"]) for f in fields}
@@ -3054,26 +2885,17 @@ def upsert_iceberg(
         )
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
-
-    def _on_disk() -> set:
-        return {
-            os.path.join(root, f)
-            for root, _d, fs in os.walk(data_dir)
-            for f in fs
-            if f.endswith(".parquet") and not f.startswith("_")
-        }
-
     new_data: list[str] = []
     n_rows = 0
     kdf = None
     if df is not None:
-        before = _on_disk()
+        before = _data_files_on_disk(data_dir)
         w = df.select(*tbl_cols)
         if pspecs:
             _write_partitioned_data(w, data_dir, pspecs)
         else:
             w.write.mode("append").parquet(data_dir)
-        new_data = sorted(_on_disk() - before)
+        new_data = sorted(_data_files_on_disk(data_dir) - before)
     elif data_files is not None:
         # injected SHARED files (the UniForm path): already on disk
         # and possibly already committed to another format's metadata
@@ -3153,111 +2975,17 @@ def upsert_iceberg(
             for c in key_cols
         )
     )
-    before2 = _on_disk()
+    before = _data_files_on_disk(data_dir)
     kdf.write.mode("append").parquet(data_dir)
-    new_del = sorted(_on_disk() - before2)
+    new_del = sorted(_data_files_on_disk(data_dir) - before)
 
-    new_sid = int(uuid.uuid4().int % (1 << 62))
+    new_sid = _new_snapshot_id()
     new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(time.time() * 1000)
-    md = os.path.join(path, _META_DIR)
     key_ids = [ids_by_name[c] for c in key_cols]
-
-    def _entry_schema(part_specs: list[dict]) -> dict:
-        es = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
-        es["fields"][2]["type"]["fields"].insert(
-            1, {"name": "content", "type": "int", "field-id": 134}
-        )
-        es["fields"][2]["type"]["fields"].insert(
-            2,
-            {
-                "name": "equality_ids",
-                "type": ["null", {"type": "array", "items": "int"}],
-                "field-id": 135,
-            },
-        )
-        if part_specs:
-            part_rec = next(
-                fl
-                for fl in es["fields"][2]["type"]["fields"]
-                if fl["name"] == "partition"
-            )
-            part_rec["type"]["fields"] = [
-                {
-                    "name": ps["fname"],
-                    "type": ["null", _PART_AVRO[ps["out_type"]]],
-                    "field-id": ps["fid"],
-                    "default": None,
-                }
-                for ps in part_specs
-            ]
-        return es
-
-    def _pvals(full: str) -> dict:
-        return _pvals_from_path(full, path, pspecs, "upsert_iceberg")
-
-    def _mk_manifest(
-        name: str,
-        files: list,
-        content: int,
-        eq: list | None,
-        part_specs: list[dict],
-        spec_id: int,
-    ) -> tuple[str, int]:
-        entries = []
-        rows = 0
-        for full in files:
-            nr = pq.ParquetFile(full).metadata.num_rows
-            rows += nr
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": new_sid,
-                    "data_file": {
-                        "content": content,
-                        "equality_ids": eq,
-                        "file_path": "file://" + full,
-                        "file_format": "PARQUET",
-                        "partition": _pvals(full) if part_specs else {},
-                        "record_count": nr,
-                        "file_size_in_bytes": os.path.getsize(full),
-                    },
-                }
-            )
-        mp = os.path.join(md, name)
-        spec_fields = (
-            [
-                {
-                    "name": ps["fname"],
-                    "transform": "identity"
-                    if ps["n"] is None
-                    else f"bucket[{ps['n']}]",
-                    "source-id": ids_by_name[ps["src"]],
-                    "field-id": ps["fid"],
-                }
-                for ps in part_specs
-            ]
-            if part_specs
-            else []
-        )
-        write_avro(
-            mp,
-            _entry_schema(part_specs),
-            entries,
-            metadata={
-                "schema": json.dumps(_current_schema(path)).encode(),
-                "schema-id": b"0",
-                "partition-spec": json.dumps(spec_fields).encode(),
-                "partition-spec-id": str(spec_id).encode(),
-                "format-version": b"2",
-                "content": b"data" if content == 0 else b"deletes",
-            },
-        )
-        return mp, rows
-
+    spec_id = int(default_spec.get("spec-id", 0))
     # global equality deletes live under an UNPARTITIONED spec; reuse
     # one if the table has it, else mint it in this commit's metadata
-    new_specs = None
+    del_spec_id = spec_id
     if pspecs:
         unpart = next(
             (
@@ -3276,102 +3004,90 @@ def upsert_iceberg(
                 + 1,
                 "fields": [],
             }
-            new_specs = list(meta.get("partition-specs", [])) + [unpart]
+            meta = dict(meta)
+            meta["partition-specs"] = list(
+                meta.get("partition-specs", [])
+            ) + [unpart]
         del_spec_id = int(unpart.get("spec-id", 0))
-    else:
-        del_spec_id = int(default_spec.get("spec-id", 0))
-    data_mp = None
+    mlist_schema, old_rows = read_avro(_resolve(snap["manifest-list"], path))
+    mlist_rows = list(old_rows)
     data_rows = 0
     if new_data:
-        data_mp, data_rows = _mk_manifest(
-            f"manifest-{new_sid}-ups-data.avro", new_data, 0, None,
-            pspecs, int(default_spec.get("spec-id", 0)),
+        entries = [
+            _added_entry(
+                new_sid,
+                f,
+                _pvals_from_path(f, path, pspecs, "upsert_iceberg")
+                if pspecs
+                else {},
+            )
+            for f in new_data
+        ]
+        data_rows = sum(e["data_file"]["record_count"] for e in entries)
+        data_mp = _write_manifest(
+            path,
+            f"manifest-{new_sid}-ups-data.avro",
+            _manifest_entry_schema(2, _part_fields(pspecs), equality_ids=True),
+            entries,
+            2,
+            spec_id,
+            default_spec.get("fields", []),
         )
-    del_mp, del_rows = _mk_manifest(
-        f"manifest-{new_sid}-ups-del.avro", new_del, 2, key_ids,
-        [], del_spec_id,
+        mlist_rows.append(
+            _manifest_list_row(
+                mlist_schema,
+                data_mp,
+                spec_id,
+                new_sid,
+                new_seq,
+                added=(len(new_data), data_rows),
+            )
+        )
+    del_entries = [
+        _added_entry(new_sid, f, {}, content=2, equality_ids=key_ids)
+        for f in new_del
+    ]
+    del_mp = _write_manifest(
+        path,
+        f"manifest-{new_sid}-ups-del.avro",
+        _manifest_entry_schema(2, equality_ids=True),
+        del_entries,
+        2,
+        del_spec_id,
+        [],
+        content=2,
     )
-    mlist_schema, old_rows = read_avro(_resolve(snap["manifest-list"], path))
-
-    def _mlist_row(
-        mp: str,
-        content: int,
-        n_files: int,
-        n_rows: int,
-        spec_id: int | None = None,
-    ):
-        full = {
-            "manifest_path": "file://" + mp,
-            "manifest_length": os.path.getsize(mp),
-            "partition_spec_id": (
-                spec_id
-                if spec_id is not None
-                else default_spec.get("spec-id", 0)
+    mlist_rows.append(
+        _manifest_list_row(
+            mlist_schema,
+            del_mp,
+            del_spec_id,
+            new_sid,
+            new_seq,
+            content=1,
+            added=(
+                len(new_del),
+                sum(e["data_file"]["record_count"] for e in del_entries),
             ),
-            "added_snapshot_id": new_sid,
-            "content": content,
-            "sequence_number": new_seq,
-            "min_sequence_number": new_seq,
-            "added_files_count": n_files,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": None,
-        }
-        return {
-            f["name"]: full.get(f["name"])
-            for f in mlist_schema["fields"]
-        }
-
-    mlist_rows = list(old_rows) + (
-        [_mlist_row(data_mp, 0, len(new_data), data_rows)]
-        if data_mp
-        else []
-    ) + [_mlist_row(del_mp, 1, len(new_del), del_rows, del_spec_id)]
-    new_mlist = os.path.join(md, f"snap-{new_sid}.avro")
-    write_avro(
-        new_mlist,
+        )
+    )
+    _commit_snapshot(
+        path,
+        meta,
+        new_sid,
+        cur,
+        new_seq,
         mlist_schema,
         mlist_rows,
-        metadata={
-            "format-version": b"2",
-            "snapshot-id": str(new_sid).encode(),
-        },
-    )
-    new_snap = {
-        "snapshot-id": new_sid,
-        "parent-snapshot-id": cur,
-        "sequence-number": new_seq,
-        "timestamp-ms": now_ms,
-        # the schema in effect at this snapshot (r13) — time travel
-        # across ADD-COLUMN evolution reads under it
-        "schema-id": int(meta.get("current-schema-id", 0)),
-        "manifest-list": "file://" + new_mlist,
-        "summary": {
+        {
             "operation": "overwrite" if new_data else "delete",
             "added-data-files": str(len(new_data)),
             "added-delete-files": str(len(new_del)),
             "added-records": str(data_rows),
         },
-    }
-    new_meta = dict(meta)
-    if new_specs is not None:
-        new_meta["partition-specs"] = new_specs
-    new_meta["last-sequence-number"] = new_seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
-    if branch is not None:
-        refs = dict(meta.get("refs") or {})
-        refs[branch] = {"snapshot-id": new_sid, "type": "branch"}
-        new_meta["refs"] = refs
-    else:
-        new_meta["current-snapshot-id"] = new_sid
-        new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now_ms, "snapshot-id": new_sid}
-        ]
-    _commit_metadata(path, new_meta, base_version=base_v)
+        branch=branch,
+        base_version=base_v,
+    )
     return {"snapshot_id": new_sid, "rows": data_rows}
 
 
@@ -3691,10 +3407,6 @@ def export_iceberg(
     resurrected as an add."""
     import urllib.parse
 
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
     if format_version not in (1, 2):
         raise ValueError(f"format_version must be 1 or 2, got {format_version}")
     if mode not in ("overwrite", "append"):
@@ -3705,14 +3417,13 @@ def export_iceberg(
     prev_meta: dict | None = None
     append_head: int | None = None
     if mode == "append":
-        prev_meta = json.load(open(_current_metadata_path(path)))
         # branch commits (new r12 — the writable half of the v2 refs
         # map, Java's toBranch): the parent is the BRANCH head, not
         # the table's current snapshot, and the commit advances only
         # refs[branch] — main lineage and snapshot-log stay put
-        append_head = prev_meta.get("current-snapshot-id")
-        if branch is not None:
-            append_head = _branch_head(prev_meta, branch, "export_iceberg")
+        prev_meta, _, append_head, prev_snap, _ = _open_parent(
+            path, "export_iceberg", branch
+        )
         format_version = int(prev_meta.get("format-version", 1))
         prev_fields = _current_schema(path).get("fields", [])
         new_fields = _iceberg_schema(df)["fields"]
@@ -3738,7 +3449,7 @@ def export_iceberg(
         return t
 
     pspecs: list[dict] = []  # parsed partition-field specs
-    for spec in partition_by or []:
+    for j, spec in enumerate(partition_by or []):
         bm = re.match(r"^\s*bucket\(\s*(\d+)\s*,\s*(\w+)\s*\)\s*$", spec)
         if bm:
             nb, c = int(bm.group(1)), bm.group(2)
@@ -3750,6 +3461,7 @@ def export_iceberg(
                     "n": nb,
                     "src_type": _src_type(c),
                     "out_type": "int",
+                    "fid": 1000 + j,
                 }
             )
         else:
@@ -3762,6 +3474,7 @@ def export_iceberg(
                     "n": None,
                     "src_type": _src_type(c),
                     "out_type": _src_type(c),
+                    "fid": 1000 + j,
                 }
             )
     if data_files is not None and pspecs:
@@ -3799,35 +3512,8 @@ def export_iceberg(
     if data_files is not None:
         pass  # files already on disk; no write
     elif pspecs:
-        from pyspark.sql.functions import pandas_udf
-
-        w = df
-        for ps in pspecs:
-            if ps["transform"] == "identity":
-                w = w.withColumn(f"_p_{ps['fname']}", F.col(ps["src"]))
-            else:
-
-                def _make_bkt(nb, st):
-                    @pandas_udf("int")
-                    def _bkt(s: pd.Series) -> pd.Series:
-                        # pd.isna, not `is None`: Arrow hands a
-                        # nullable int column to pandas as float64
-                        # with NaN, which `is None` misses
-                        return s.map(
-                            lambda v: None
-                            if pd.isna(v)
-                            else iceberg_bucket(v, st, nb)
-                        ).astype("Int32")
-
-                    return _bkt
-
-                w = w.withColumn(
-                    f"_p_{ps['fname']}",
-                    _make_bkt(ps["n"], ps["src_type"])(F.col(ps["src"])),
-                )
-        w.write.partitionBy(*(f"_p_{ps['fname']}" for ps in pspecs)).mode(
-            write_mode
-        ).parquet(data_dir)
+        w, shadows = _with_partition_shadows(df, pspecs)
+        w.write.partitionBy(*shadows).mode(write_mode).parquet(data_dir)
     else:
         df.write.mode(write_mode).parquet(data_dir)
     out_types = {ps["fname"]: ps["out_type"] for ps in pspecs}
@@ -3876,59 +3562,31 @@ def export_iceberg(
                 full = os.path.join(root, f)
                 if full not in prev_ref:  # append: NEW files only
                     parts.append((full, vals))
-    snapshot_id = int(uuid.uuid4().int % (1 << 62))
-    now_ms = int(time.time() * 1000)
-    field_ids = {f.name: i + 1 for i, f in enumerate(df.schema.fields)}
+    snapshot_id = _new_snapshot_id()
+    ice_schema = _iceberg_schema(df)
     spec_fields = [
         {
             "name": ps["fname"],
             "transform": ps["transform"],
-            "source-id": field_ids[ps["src"]],
-            "field-id": 1000 + j,
+            "source-id": next(
+                f["id"] for f in ice_schema["fields"] if f["name"] == ps["src"]
+            ),
+            "field-id": ps["fid"],
         }
-        for j, ps in enumerate(pspecs)
+        for ps in pspecs
     ]
-    entry_schema = _MANIFEST_ENTRY_SCHEMA
-    if pspecs or format_version == 2:
-        entry_schema = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
-    if format_version == 2:
-        # v2 spec: data_file.content is REQUIRED (0 = DATA) — Java v2
-        # readers reject manifest entries that omit it
-        entry_schema["fields"][2]["type"]["fields"].insert(
-            1, {"name": "content", "type": "int", "field-id": 134}
-        )
-    if pspecs:
-        part_rec = next(
-            fl
-            for fl in entry_schema["fields"][2]["type"]["fields"]
-            if fl["name"] == "partition"
-        )
-        part_rec["type"]["fields"] = [
-            {
-                "name": ps["fname"],
-                "type": ["null", _PART_AVRO[ps["out_type"]]],
-                "field-id": 1000 + j,
-                "default": None,
-            }
-            for j, ps in enumerate(pspecs)
-        ]
+    entry_schema = _manifest_entry_schema(
+        format_version, _part_fields(pspecs), stats=stats
+    )
+    cols = [(f["name"], f["id"], f["type"]) for f in ice_schema["fields"]]
     file_stats: dict[str, dict] = {}
     if stats:
         from .filestats import parquet_footer_stats
 
-        if entry_schema is _MANIFEST_ENTRY_SCHEMA:
-            entry_schema = json.loads(json.dumps(_MANIFEST_ENTRY_SCHEMA))
-        entry_schema["fields"][2]["type"]["fields"] += (
-            _stats_map_schema_fields()
-        )
         file_stats = parquet_footer_stats(
             df.sparkSession, [full for full, _ in parts]
         )
-        ice_types = {
-            f["name"]: f["type"]
-            for f in _iceberg_schema(df)["fields"]
-            if isinstance(f["type"], str)
-        }
+    mlist_schema = _manifest_list_schema(format_version, bool(pspecs))
     # one manifest per distinct partition tuple: entries carry real
     # partition structs, the manifest list carries per-field bound
     # summaries — both Iceberg pruning levels
@@ -3951,132 +3609,140 @@ def export_iceberg(
         by_part.items(),
         key=lambda kv: tuple((x is None, x) for x in kv[0]),
     )):
-        entries = []
-        for full, vals in group:
-            n = pq.ParquetFile(full).metadata.num_rows
-            total_rows += n
-            n_files += 1
-            data_file = {
-                # spec: file_path is a full URI, not a bare path
-                "file_path": "file://" + full,
-                "file_format": "PARQUET",
-                "partition": {
-                    ps["fname"]: vals.get(ps["fname"]) for ps in pspecs
-                },
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(full),
-            }
-            if format_version == 2:
-                data_file["content"] = 0  # DATA
-            if stats and full in file_stats:
-                fs = file_stats[full]
-                vc, nvc, lo, hi = {}, {}, {}, {}
-                for c, fid in field_ids.items():
-                    t = ice_types.get(c)
-                    if t is None:
-                        continue
-                    vc[fid] = fs["numRecords"]
-                    if c in fs["nulls"]:
-                        nvc[fid] = fs["nulls"][c]
-                    if c in fs["min"] and c in fs["max"]:
-                        try:
-                            lo[fid] = _single_value_bytes(t, fs["min"][c])
-                            hi[fid] = _single_value_bytes(t, fs["max"][c])
-                        except (TypeError, ValueError):
-                            pass  # unrenderable bound stays absent
-                data_file["value_counts"] = _kv(vc)
-                data_file["null_value_counts"] = _kv(nvc)
-                data_file["lower_bounds"] = _kv(lo)
-                data_file["upper_bounds"] = _kv(hi)
-            entries.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "data_file": data_file,
-                }
+        entries = [
+            _added_entry(
+                snapshot_id,
+                full,
+                {ps["fname"]: vals.get(ps["fname"]) for ps in pspecs},
+                stats=(
+                    _stats_maps(file_stats[full], cols)
+                    if full in file_stats
+                    else None
+                ),
             )
-        manifest_path = os.path.join(
-            md, f"manifest-{snapshot_id}-{gi}.avro"
-        )
-        write_avro(
-            manifest_path,
+            for full, vals in group
+        ]
+        rows = sum(e["data_file"]["record_count"] for e in entries)
+        total_rows += rows
+        n_files += len(entries)
+        manifest_path = _write_manifest(
+            path,
+            f"manifest-{snapshot_id}-{gi}.avro",
             entry_schema,
             entries,
-            # key-value metadata Java manifest readers require (spec
-            # "Manifests": schema, spec, ids, format-version, content)
-            metadata={
-                "schema": json.dumps(_iceberg_schema(df)).encode(),
-                "schema-id": b"0",
-                "partition-spec": json.dumps(spec_fields).encode(),
-                "partition-spec-id": b"0",
-                "format-version": str(format_version).encode(),
-                "content": b"data",
-            },
+            format_version,
+            0,
+            spec_fields,
+            schema=ice_schema,
         )
-        row = {
-            "manifest_path": "file://" + manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "added_snapshot_id": snapshot_id,
-        }
-        if format_version == 2:
-            row["content"] = 0  # data manifest
-            row["sequence_number"] = new_seq
-            row["min_sequence_number"] = new_seq
-            # v2 spec marks the file/row counts REQUIRED in the
-            # manifest list; all entries here are status=ADDED
-            row["added_files_count"] = len(entries)
-            row["existing_files_count"] = 0
-            row["deleted_files_count"] = 0
-            row["added_rows_count"] = sum(
-                e["data_file"]["record_count"] for e in entries
+        manifest_rows.append(
+            _manifest_list_row(
+                mlist_schema,
+                manifest_path,
+                0,
+                snapshot_id,
+                new_seq,
+                added=(len(entries), rows),
+                partitions=_partition_summaries(pspecs, key),
             )
-            row["existing_rows_count"] = 0
-            row["deleted_rows_count"] = 0
-        if pspecs:
-            row["partitions"] = [
-                {
-                    "contains_null": v is None,
-                    "lower_bound": None
-                    if v is None
-                    else _single_value_bytes(ps["out_type"], v),
-                    "upper_bound": None
-                    if v is None
-                    else _single_value_bytes(ps["out_type"], v),
-                }
-                for ps, v in zip(pspecs, key)
-            ]
-        manifest_rows.append(row)
-    mlist_schema = _MANIFEST_LIST_SCHEMA
-    if format_version == 2:
-        mlist_schema = json.loads(json.dumps(mlist_schema))
-        mlist_schema["fields"] += [
+        )
+    summary = {
+        "operation": "append",
+        "added-data-files": str(n_files),
+        "added-records": str(total_rows),
+    }
+    if prev_meta is not None:
+        # carry the previous snapshot's manifests forward (delete
+        # manifests included) — re-encoded under the new list schema,
+        # gaps filled with their defaults
+        _, prev_rows = read_avro(_resolve(prev_snap["manifest-list"], path))
+        schema_names = [f["name"] for f in mlist_schema["fields"]]
+        carried = [
+            {
+                name: m.get(
+                    name, 0 if "count" in name or "rows" in name else None
+                )
+                for name in schema_names
+            }
+            for m in prev_rows
+        ]
+        _commit_snapshot(
+            path,
+            prev_meta,
+            snapshot_id,
+            append_head,
+            new_seq,
+            mlist_schema,
+            carried + manifest_rows,
+            summary,
+            branch=branch,
+        )
+        return n_files
+    mlist_path = _write_manifest_list(
+        path, snapshot_id, format_version, mlist_schema, manifest_rows
+    )
+    now_ms = int(time.time() * 1000)
+    meta = {
+        "format-version": format_version,
+        **({"last-sequence-number": 1} if format_version == 2 else {}),
+        "table-uuid": str(uuid.uuid4()),
+        "location": path,
+        "last-updated-ms": now_ms,
+        "last-column-id": len(df.schema.fields),
+        "schema": ice_schema,
+        "schemas": [ice_schema],
+        "current-schema-id": 0,
+        "partition-spec": spec_fields,
+        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+        "default-spec-id": 0,
+        "last-partition-id": 999 + len(pspecs),
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "default-sort-order-id": 0,
+        "properties": {
+            **({"name": table_name} if table_name else {}),
+            "write.format.default": "parquet",
+        },
+        "current-snapshot-id": snapshot_id,
+        "snapshots": [
+            {
+                "snapshot-id": snapshot_id,
+                "timestamp-ms": now_ms,
+                **({"sequence-number": 1} if format_version == 2 else {}),
+                "schema-id": 0,
+                "manifest-list": "file://" + mlist_path,
+                "summary": summary,
+            }
+        ],
+        "snapshot-log": [
+            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
+        ],
+    }
+    with open(os.path.join(md, "v1.metadata.json"), "w") as fh:
+        json.dump(meta, fh)
+    with open(os.path.join(md, "version-hint.text"), "w") as fh:
+        fh.write("1")
+    return n_files
+
+
+def _manifest_list_schema(fmt_version: int, partitioned: bool) -> dict:
+    """The exporter's manifest-list schema: v2 adds the sequence
+    numbers, content and the file/row counts the spec marks REQUIRED
+    ("Manifest Lists"); partitioned tables add the field summaries."""
+    schema = json.loads(json.dumps(_MANIFEST_LIST_SCHEMA))
+    if fmt_version == 2:
+        schema["fields"] += [
             {"name": "content", "type": "int", "field-id": 517},
             {"name": "sequence_number", "type": "long", "field-id": 515},
-            {
-                "name": "min_sequence_number",
-                "type": "long",
-                "field-id": 516,
-            },
-            # required in v2 manifest lists (spec "Manifest Lists")
+            {"name": "min_sequence_number", "type": "long", "field-id": 516},
             {"name": "added_files_count", "type": "int", "field-id": 504},
-            {
-                "name": "existing_files_count",
-                "type": "int",
-                "field-id": 505,
-            },
+            {"name": "existing_files_count", "type": "int", "field-id": 505},
             {"name": "deleted_files_count", "type": "int", "field-id": 506},
             {"name": "added_rows_count", "type": "long", "field-id": 512},
-            {
-                "name": "existing_rows_count",
-                "type": "long",
-                "field-id": 513,
-            },
+            {"name": "existing_rows_count", "type": "long", "field-id": 513},
             {"name": "deleted_rows_count", "type": "long", "field-id": 514},
         ]
-    if pspecs:
-        mlist_schema = json.loads(json.dumps(mlist_schema))
-        mlist_schema["fields"].append(
+    if partitioned:
+        schema["fields"].append(
             {
                 "name": "partitions",
                 "field-id": 507,
@@ -4113,125 +3779,7 @@ def export_iceberg(
                 ],
             }
         )
-    if prev_meta is not None:
-        # carry the previous snapshot's manifests forward (delete
-        # manifests included) — re-encoded under the new list schema,
-        # gaps filled with their defaults
-        prev_snap = next(
-            s
-            for s in prev_meta["snapshots"]
-            if s["snapshot-id"] == append_head
-        )
-        _, prev_rows = read_avro(_resolve(prev_snap["manifest-list"], path))
-        schema_names = [f["name"] for f in mlist_schema["fields"]]
-        carried = [
-            {
-                name: m.get(
-                    name, 0 if "count" in name or "rows" in name else None
-                )
-                for name in schema_names
-            }
-            for m in prev_rows
-        ]
-        manifest_rows = carried + manifest_rows
-    mlist_path = os.path.join(md, f"snap-{snapshot_id}.avro")
-    write_avro(
-        mlist_path,
-        mlist_schema,
-        manifest_rows,
-        metadata={
-            "format-version": str(format_version).encode(),
-            "snapshot-id": str(snapshot_id).encode(),
-        },
-    )
-    if prev_meta is not None:
-        new_snap = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": append_head,
-            "timestamp-ms": now_ms,
-            **(
-                {"sequence-number": new_seq}
-                if format_version == 2
-                else {}
-            ),
-            # schema in effect at this snapshot (r13) — time travel
-            # across later ADD-COLUMN evolution reads under it
-            "schema-id": int(prev_meta.get("current-schema-id", 0)),
-            "manifest-list": "file://" + mlist_path,
-            "summary": {
-                "operation": "append",
-                "added-data-files": str(n_files),
-                "added-records": str(total_rows),
-            },
-        }
-        new_meta = dict(prev_meta)
-        new_meta["last-updated-ms"] = now_ms
-        if format_version == 2:
-            new_meta["last-sequence-number"] = new_seq
-        new_meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [
-            new_snap
-        ]
-        if branch is not None:
-            # advance ONLY the branch head; the main lineage and the
-            # snapshot-log (which tracks current-table-state changes,
-            # per the spec) are untouched
-            refs = dict(prev_meta.get("refs") or {})
-            refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-            new_meta["refs"] = refs
-        else:
-            new_meta["current-snapshot-id"] = snapshot_id
-            # extend snapshot-log so timestamp-based history matches
-            # real Iceberg writers (ADVICE r9: append never grew the
-            # log)
-            new_meta["snapshot-log"] = list(
-                prev_meta.get("snapshot-log", [])
-            ) + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-        _commit_metadata(path, new_meta)
-        return n_files
-    meta = {
-        "format-version": format_version,
-        **({"last-sequence-number": 1} if format_version == 2 else {}),
-        "table-uuid": str(uuid.uuid4()),
-        "location": path,
-        "last-updated-ms": now_ms,
-        "last-column-id": len(df.schema.fields),
-        "schema": _iceberg_schema(df),
-        "schemas": [_iceberg_schema(df)],
-        "current-schema-id": 0,
-        "partition-spec": spec_fields,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "default-spec-id": 0,
-        "last-partition-id": 999 + len(pspecs),
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "properties": {
-            **({"name": table_name} if table_name else {}),
-            "write.format.default": "parquet",
-        },
-        "current-snapshot-id": snapshot_id,
-        "snapshots": [
-            {
-                "snapshot-id": snapshot_id,
-                "timestamp-ms": now_ms,
-                **({"sequence-number": 1} if format_version == 2 else {}),
-                "schema-id": 0,
-                "manifest-list": "file://" + mlist_path,
-                "summary": {
-                    "operation": "append",
-                    "added-data-files": str(n_files),
-                    "added-records": str(total_rows),
-                },
-            }
-        ],
-        "snapshot-log": [
-            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-        ],
-    }
-    with open(os.path.join(md, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(md, "version-hint.text"), "w") as fh:
-        fh.write("1")
-    return n_files
+    return schema
 
 
 def _iceberg_schema(df: DataFrame) -> dict:

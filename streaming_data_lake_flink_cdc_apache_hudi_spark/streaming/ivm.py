@@ -70,6 +70,7 @@ commit id.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Sequence
 
 from pyspark import InheritableThread
@@ -543,10 +544,7 @@ class FlagshipStreamRunner:
         self.checkpoint = f"{root}/_checkpoint"
 
     def start(self, trigger: dict | None = None):
-        import os
-
-        from ..sources.cdc_feed import envelope_schema  # noqa: F401
-        from .pipeline import reduce_changelog_batch
+        from .pipeline import _start, reduce_changelog_batch
 
         stream = (
             self.spark.readStream.schema(mux_feed_schema())
@@ -625,12 +623,7 @@ class FlagshipStreamRunner:
                 commit_id=f"epoch-{epoch_id}",
             )
 
-        writer = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", self.checkpoint)
-            .outputMode("update")
-        )
-        return writer.trigger(**(trigger or {"availableNow": True})).start()
+        return _start(stream, _apply, self.checkpoint, trigger)
 
 
 class GroupAggIVM:

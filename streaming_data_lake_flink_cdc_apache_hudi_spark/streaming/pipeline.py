@@ -255,33 +255,16 @@ def stream_upsert_hudi(
     import threading
     import time as _time
 
-    from ..sources.hudi_interop import _record_key_fields
+    from ..sources.hudi_interop import (
+        _claim_instant,
+        _deltas_since_last_compaction,
+        _next_instant,
+        _record_key_fields,
+        compact_hudi,
+    )
 
     keys = _record_key_fields(path)
     compactor: dict = {"thread": None, "last_time": _time.monotonic()}
-
-    def _deltas_since_last_compaction() -> int:
-        from ..sources.hudi_interop import _HOODIE as _H
-
-        tl = os.path.join(path, _H)
-        import json as _json
-
-        last_comp = ""
-        deltas = []
-        for f in os.listdir(tl):
-            stem, _, suf = f.partition(".")
-            if not stem.isdigit():
-                continue
-            if suf == "deltacommit":
-                deltas.append(stem)
-            elif suf == "commit":
-                try:
-                    raw = open(os.path.join(tl, f)).read().strip()
-                    if raw and _json.loads(raw).get("compacted"):
-                        last_comp = max(last_comp, stem)
-                except (OSError, ValueError):
-                    continue
-        return sum(1 for d in deltas if d > last_comp)
 
     def _maybe_compact(spark) -> None:
         if compact_delta_commits is None and compact_delta_seconds is None:
@@ -291,7 +274,7 @@ def stream_upsert_hudi(
             return  # one compactor at a time (Hudi's async scheduler)
         due_n = (
             compact_delta_commits is not None
-            and _deltas_since_last_compaction() >= compact_delta_commits
+            and _deltas_since_last_compaction(path) >= compact_delta_commits
         )
         due_t = (
             compact_delta_seconds is not None
@@ -300,18 +283,12 @@ def stream_upsert_hudi(
         )
         if not (due_n or due_t):
             return
-        if due_t and not due_n and _deltas_since_last_compaction() == 0:
+        if due_t and not due_n and _deltas_since_last_compaction(path) == 0:
             return  # time elapsed but nothing to fold (Hudi's no-op)
         compactor["last_time"] = _time.monotonic()
         # CLAIM the compaction instant INLINE (the scheduling step
         # Hudi's writer does under its lock) so the NEXT micro-batch's
         # deltacommit lands past it — only the data rewrite runs async
-        from ..sources.hudi_interop import (
-            _claim_instant,
-            _next_instant,
-            compact_hudi,
-        )
-
         inst = _next_instant(path)
         _claim_instant(path, inst, "commit")
 

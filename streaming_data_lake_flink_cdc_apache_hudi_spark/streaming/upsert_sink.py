@@ -683,8 +683,22 @@ class UpsertLakeTable:
         bucket_filter: Sequence[int] | None = None,
         with_file: bool = False,
         as_of_seq: int | None = None,
+        base_files: Sequence[str] | None = None,
     ) -> DataFrame | None:
-        base, log = self._read_dir(self._base), self._read_dir(self._log)
+        """Base ∪ log reduced to the latest version per key (deletes
+        kept as ``_op = 'D'`` rows). ``base_files`` restricts the base
+        side to those files — a bloom-pruned probe."""
+        if base_files is None:
+            base = self._read_dir(self._base)
+        elif base_files:
+            base = (
+                self.spark.read.option("basePath", self._base)
+                .schema(self._reader_schema(self._base))
+                .parquet(*base_files)
+            )
+        else:
+            base = None
+        log = self._read_dir(self._log)
         if base is None and log is None:
             return None
         if with_file:
@@ -875,16 +889,18 @@ class UpsertLakeTable:
         the unpruned snapshot when the sidecar is missing or stale
         (base rewritten by a newer compaction) — pruning is an
         optimization, never a correctness dependency."""
-        from ..operators.skipindex import candidate_files
+        from ..operators.skipindex import bloom_candidates, index_path
 
         self._ensure_recovered()
         full = lambda: self.snapshot().filter(  # noqa: E731
             F.col(column) == value
         )
         try:
-            files, _ = candidate_files(self._base, column, value)
+            with open(index_path(self._base, column)) as fh:
+                idx = json.load(fh)
         except FileNotFoundError:
             return full()
+        files = bloom_candidates(idx, self._base, value)
         current = set()
         if os.path.isdir(self._base):
             for root, _dirs, fs in os.walk(self._base):
@@ -892,35 +908,14 @@ class UpsertLakeTable:
                     if f.endswith(".parquet"):
                         current.add(os.path.join(root, f))
         indexed_ok = all(os.path.exists(f) for f in files)
-        from ..operators.skipindex import index_path
-        import json as _json
-
-        with open(index_path(self._base, column)) as fh:
-            idx_files = set(_json.load(fh)["files"])
         covered = {
             os.path.relpath(p, os.path.abspath(self._base)) for p in current
-        } <= idx_files
+        } <= set(idx["files"])
         if not indexed_ok or not covered:
             return full()  # stale sidecar: base was rewritten since
-        log = self._read_dir(self._log)
-        base = (
-            self.spark.read.option("basePath", self._base)
-            .schema(self._reader_schema(self._base))
-            .parquet(*files)
-            if files
-            else None
-        )
-        if base is None and log is None:
+        merged = self._merged(base_files=files)
+        if merged is None:
             return full()
-        both = (
-            base.unionByName(log)
-            if base is not None and log is not None
-            else (base if base is not None else log)
-        )
-        order = [c for c in PRECOMBINE_COLS if c in both.columns]
-        merged = latest_by_key(
-            both, self.key, [*order, "_commit_seq", "_op"]
-        )
         return (
             merged.filter(F.col("_op") != "D")
             .filter(F.col(column) == value)

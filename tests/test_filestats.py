@@ -200,6 +200,17 @@ def test_delta_partition_values_prune_without_stats(spark, tmp_path):
     assert 0 < len(pr.inputFiles()) < total
     assert pr.count() == 25
     assert all("b=2" in f for f in pr.inputFiles())
+    # a NULL partition value is logged as JSON null (PROTOCOL.md), not
+    # as Spark's __HIVE_DEFAULT_PARTITION__ directory name — which the
+    # pruner would take for a real value with no nulls
+    dn = str(tmp_path / "pn")
+    export_delta(
+        spark.createDataFrame([(1, "a"), (2, None), (3, "b")], "id int, p string"),
+        dn,
+        partition_by=["p"],
+    )
+    assert read_delta(spark, dn).filter("p is null").count() == 1
+    assert read_delta_pruned(spark, dn, [("p", "is_null", None)]).count() == 1
 
 
 # --------------------------------------------------------------- iceberg
